@@ -20,6 +20,18 @@ object EventOps {
 
   private val D2 = DecimalType(18, 2)
 
+  /** Round a double to 4 decimals the way DuckDB's `round(x, 4)` does:
+    * scale by 1e4, round to an integer half away from zero, divide by
+    * 1e4 — all on the binary double. Spark's `round(x, 4)` instead rounds
+    * the shortest decimal rendering of x, which disagrees on ties the
+    * binary value misses (9 245 499 000 µs / 6e7 = 154.09164999… as a
+    * double: DuckDB 154.0916, Spark `round(_, 4)` 154.0917). Rounding
+    * to scale 0 has no such gap: a double renders as ".5" only when it
+    * is exactly .5.
+    */
+  private[graft] def round4(x: Column): Column =
+    round(x * lit(1.0e4), 0) / lit(1.0e4)
+
   /** Precomputed (min ts, max ts) of an event frame — the control-plane
     * input every cron-slot operator needs to size its slot expansion.
     * Callers running SEVERAL cron queries over one events dir should
@@ -143,8 +155,8 @@ object EventOps {
         ((unix_micros(col("actual_start")) -
           unix_micros(col("expected_start"))) >
           marginSeconds * 1000000L).as("late_start"),
-        round((unix_micros(col("actual_start")) -
-          unix_micros(col("expected_start"))) / lit(6.0e7), 4)
+        round4((unix_micros(col("actual_start")) -
+          unix_micros(col("expected_start"))) / lit(6.0e7))
           .as("minutes_late"))
       .orderBy("user_id", "day")
   }
@@ -178,8 +190,9 @@ object EventOps {
         col("ts").as("actual_start"), col("expected_start"),
         ((unix_micros(col("ts")) - unix_micros(col("expected_start"))) >
           marginSeconds * 1000000L).as("late_start"),
-        round((unix_micros(col("ts")) - unix_micros(col("expected_start"))) /
-          lit(6.0e7), 4).as("minutes_late"))
+        round4((unix_micros(col("ts")) -
+          unix_micros(col("expected_start"))) / lit(6.0e7))
+          .as("minutes_late"))
       .orderBy("user_id", "session_id")
   }
 
@@ -336,8 +349,8 @@ object EventOps {
         col("expected_start"), expectedEnd.as("expected_end"),
         ((unix_micros(col("actual_end")) - unix_micros(expectedEnd)) >
           marginSeconds * 1000000L).as("late_end"),
-        round((unix_micros(col("actual_end")) - unix_micros(expectedEnd)) /
-          lit(6.0e7), 4).as("minutes_over"))
+        round4((unix_micros(col("actual_end")) - unix_micros(expectedEnd)) /
+          lit(6.0e7)).as("minutes_over"))
       .orderBy("user_id", "session_id")
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
+import scala.concurrent.duration._
 
 /** Executes a set of ONE-ROW aggregate passes as genuinely concurrent
   * Spark actions and recombines their single rows into one
@@ -101,14 +102,18 @@ object ConcurrentPasses {
     }
   }
 
+  /** The bound on any await of concurrent engine work:
+    * `spark.graft.passTimeoutSec`, default 86400 s.
+    */
+  def passTimeout(spark: SparkSession): FiniteDuration =
+    spark.conf.getOption("spark.graft.passTimeoutSec")
+      .map(_.toLong).getOrElse(86400L).seconds
+
   /** Run the thunks on one bounded pool; preserves input order. */
   private def awaitAllOn[A](spark: SparkSession,
                             thunks: Seq[() => A]): Seq[A] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
-    val timeout = Duration(
-      spark.conf.getOption("spark.graft.passTimeoutSec")
-        .map(_.toLong).getOrElse(86400L), SECONDS)
+    val timeout = passTimeout(spark)
     // pool bound 16: measured optimum on local[32] — a pool as wide as
     // the core count (32) oversubscribes (each in-flight pass holds a
     // driver submission thread AND an executor task slot; profile

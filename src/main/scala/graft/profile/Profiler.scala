@@ -179,7 +179,7 @@ object Profiler {
       case (f, _) => isProfilable(f.dataType)
     }.toSeq
     require(fields.nonEmpty, s"no profilable columns in $tableName")
-    val passes = memoPasses(df, s"std:$distincts:$exactPercentiles")(
+    val passes = memoPasses(df, stdTag(distincts, exactPercentiles))(
       buildPasses(df, fields, distincts, exactPercentiles))
     val agged = graft.operators.ConcurrentPasses.collectOneRow(
       df.sparkSession, passes)
@@ -190,10 +190,15 @@ object Profiler {
     * profile invocation spends ~2 s of pure DRIVER work building,
     * analyzing and planning its ~31 fresh pass DataFrames (measured,
     * tools/ProfInterleave: pre-built passes collect in 1.2-1.5 s where
-    * the full profile() takes 3.3-5.1 s on sf0.1 lineitem). Plans are
-    * cached, results never: every invocation re-executes every
-    * scan/aggregate job.
+    * the full profile() takes 3.3-5.1 s on sf0.1 lineitem). A hit
+    * re-collects the memoized frames, reusing their materialized
+    * shuffle stages; the memo key carries the input files' signature,
+    * so a table rewritten in place is profiled afresh.
     */
+  private[graft] def stdTag(distincts: String,
+                            exactPercentiles: Boolean): String =
+    s"std:$distincts:$exactPercentiles"
+
   private def memoPasses(df: DataFrame, tag: String)
                         (build: => Seq[DataFrame]): Seq[DataFrame] =
     graft.operators.PassMemo.passes(df, tag)(build)
@@ -381,7 +386,7 @@ object Profiler {
       fs
     }
     val groups = inputs.zip(fieldsPer).map { case ((df, _), fs) =>
-      memoPasses(df, s"std:$distincts:$exactDistinct")(
+      memoPasses(df, stdTag(distincts, exactDistinct))(
         buildPasses(df, fs, distincts, exactPercentiles = exactDistinct))
     }
     val aggeds = graft.operators.ConcurrentPasses

@@ -16,10 +16,14 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, StringType}
   *
   * Execution shape (100 TB): all non-distinct measures for all tests on a
   * table are computed in a single `df.agg(...)` — one scan, partial
-  * aggregation map-side, a one-row shuffle. Baseline statistics arrive as
-  * literals inside the plan (captured by a prior profiling run), so no join
-  * is needed at all; the baseline-vs-measure comparison is constant-folded
-  * scalar math.
+  * aggregation map-side, a one-row shuffle. Baseline statistics (captured
+  * by a prior profiling run) and thresholds enter the plan as run-time
+  * parameters ([[graft.functions.Param]]), so no join is needed at all and
+  * the baseline-vs-measure comparison is scalar math. They are NOT
+  * literals on purpose: an inlined double lands in the generated Java
+  * source, so every refresh that moves a baseline would recompile every
+  * pass; as parameters the generated classes depend only on the suite's
+  * shape and are reused across refreshes.
   *
   * Distinct-counting measures (Unique, Unique_Pct, Distinct_Value_Ct,
   * Distinct_Date_Ct, and the weekly-monthly gap tests) are split into ONE
@@ -102,16 +106,20 @@ object TestEvaluator {
   private def sumDecSql(cs: String) =
     s"CAST(sum(CAST($cs AS DECIMAL(28,6))) AS DOUBLE)"
   private def ts(v: String): Column = to_timestamp(lit(v))
+  // baseline-derived constants: read at run time, never inlined into
+  // generated code (see graft.functions.Param)
+  private def p(v: Double): Column = graft.functions.Param.double(v)
+  private def pts(v: String): Column = graft.functions.Param.timestamp(v)
 
   /** Two-proportion z statistic |p1-p0|/se with pooled se; 0 when se==0.
-    * x1/n1c are in-engine aggregates; x0/n0 baseline literals.
+    * x1/n1c are in-engine aggregates; x0/n0 baseline parameters.
     */
   private def zProp(x1: Column, n1c: Column, x0: Double,
                     n0: Double): Column = {
-    val p0 = lit(x0 / n0)
-    val pooled = (x1 + lit(x0)) / (n1c + lit(n0))
+    val p0 = p(x0 / n0)
+    val pooled = (x1 + p(x0)) / (n1c + p(n0))
     val se = sqrt(pooled * (lit(1.0) - pooled) *
-      (lit(1.0 / n0) + lit(1.0) / n1c))
+      (p(1.0 / n0) + lit(1.0) / n1c))
     when(se > 0, round(abs(x1 / n1c - p0) / se, 4)).otherwise(0.0)
   }
   private def zPropSql(x1: String, n1: String, x0: Double,
@@ -213,7 +221,7 @@ object TestEvaluator {
       case "Min_Date" =>
         // earliest date no earlier than baseline (data_tests.csv:8)
         val bv = d.pS("Baseline_Value")
-        countFam(cnt(c < ts(bv)), cntSql(s"$cs < TIMESTAMP '$bv'"),
+        countFam(cnt(c < pts(bv)), cntSql(s"$cs < TIMESTAMP '$bv'"),
           "Dates earlier than baseline minimum found.", 0.0)
 
       case "Avg_Shift" =>
@@ -221,7 +229,7 @@ object TestEvaluator {
         val b = d.pD("Baseline_Avg"); val sd = d.pD("Baseline_SD")
         val avg1 = sumDec(c) / nVal(c)
         sigmaFam(
-          when(nVal(c) > 0, round(abs(avg1 - lit(b)) / lit(sd), 4))
+          when(nVal(c) > 0, round(abs(avg1 - p(b)) / p(sd), 4))
             .otherwise(0.0),
           s"CASE WHEN ${nValSql(cs)} > 0 THEN round(abs(${sumDecSql(cs)}/${nValSql(cs)} - $b)/$sd, 4) ELSE 0.0 END",
           "Significant shift in mean value vs. baseline.", T)
@@ -239,9 +247,9 @@ object TestEvaluator {
         // mean of NEW values vs baseline mean (data_tests.csv:13)
         val v0 = d.pD("Baseline_Value_Ct"); val s0 = d.pD("Baseline_Sum")
         val b = d.pD("Baseline_Avg"); val sd = d.pD("Baseline_SD")
-        val incr = (sumDec(c) - lit(s0)) / (nVal(c) - lit(v0))
+        val incr = (sumDec(c) - p(s0)) / (nVal(c) - p(v0))
         sigmaFam(
-          when(nVal(c) > v0, round(abs(incr - lit(b)) / lit(sd), 4))
+          when(nVal(c) > p(v0), round(abs(incr - p(b)) / p(sd), 4))
             .otherwise(0.0),
           s"CASE WHEN ${nValSql(cs)} > $v0 THEN round(abs((${sumDecSql(cs)} - $s0)/(${nValSql(cs)} - $v0) - $b)/$sd, 4) ELSE 0.0 END",
           "Significant shift in mean of incremental values vs. baseline.", T)
@@ -249,7 +257,7 @@ object TestEvaluator {
       case "Min_Val" =>
         // minimum no lower than baseline minimum (data_tests.csv:14)
         val bound = d.pD("Baseline_Value") - T
-        countFam(cnt(c < lit(bound)), cntSql(s"$cs < $bound"),
+        countFam(cnt(c < p(bound)), cntSql(s"$cs < $bound"),
           "Values lower than baseline minimum found.", 0.0)
 
       case "Outlier_IQR" =>
@@ -261,7 +269,8 @@ object TestEvaluator {
         val iqr = p75 - p25
         val lo = p25 - 1.5 * iqr; val hi = p75 + 1.5 * iqr
         sigmaFam(
-          when(nVal(c) > 0, round(cnt(c < lo || c > hi) / nVal(c), 4))
+          when(nVal(c) > 0,
+            round(cnt(c < p(lo) || c > p(hi)) / nVal(c), 4))
             .otherwise(0.0),
           s"CASE WHEN ${nValSql(cs)} > 0 THEN round(${cntSql(s"$cs < $lo OR $cs > $hi")}/${nValSql(cs)}, 4) ELSE 0.0 END",
           "Fraction of values outside the IQR fences exceeds threshold.",
@@ -286,7 +295,7 @@ object TestEvaluator {
         // maximum no higher than baseline maximum + threshold headroom
         // (extended counterpart of Min_Val, data_tests.csv:14)
         val bound = d.pD("Baseline_Value") + T
-        countFam(cnt(c > lit(bound)), cntSql(s"$cs > $bound"),
+        countFam(cnt(c > p(bound)), cntSql(s"$cs > $bound"),
           "Values higher than baseline maximum found.", 0.0)
 
       case "Unique" =>
@@ -301,7 +310,7 @@ object TestEvaluator {
         val numeric = scala.util.Try(bv.toDouble).toOption
         numeric match {
           case Some(n) =>
-            countFam(cnt(c =!= lit(n)), cntSql(s"$cs <> $n"),
+            countFam(cnt(c =!= p(n)), cntSql(s"$cs <> $n"),
               "Values differing from baseline constant found.")
           case None =>
             countFam(cnt(c =!= lit(bv)), cntSql(s"$cs <> '${esc(bv)}'"),
@@ -374,7 +383,7 @@ object TestEvaluator {
       case "Outlier_Pct_Above" =>
         val hi = d.pD("Baseline_Avg") + 2 * d.pD("Baseline_SD")
         sigmaFam(
-          when(nVal(c) > 0, round(cnt(c > lit(hi)) / nVal(c), 6))
+          when(nVal(c) > 0, round(cnt(c > p(hi)) / nVal(c), 6))
             .otherwise(0.0),
           s"CASE WHEN ${nValSql(cs)} > 0 THEN round(${cntSql(s"$cs > $hi")}/${nValSql(cs)}, 6) ELSE 0.0 END",
           "Percent of outliers above 2 SD over mean exceeds threshold.", T)
@@ -382,7 +391,7 @@ object TestEvaluator {
       case "Outlier_Pct_Below" =>
         val lo = d.pD("Baseline_Avg") - 2 * d.pD("Baseline_SD")
         sigmaFam(
-          when(nVal(c) > 0, round(cnt(c < lit(lo)) / nVal(c), 6))
+          when(nVal(c) > 0, round(cnt(c < p(lo)) / nVal(c), 6))
             .otherwise(0.0),
           s"CASE WHEN ${nValSql(cs)} > 0 THEN round(${cntSql(s"$cs < $lo")}/${nValSql(cs)}, 6) ELSE 0.0 END",
           "Percent of outliers below 2 SD under mean exceeds threshold.", T)
@@ -394,7 +403,7 @@ object TestEvaluator {
       case "Row_Ct_Pct" =>
         // absolute percent deviation of row count vs baseline bounded
         val b = d.pD("Baseline_Ct")
-        sigmaFam(round(abs(nAll - lit(b)) / lit(b) * 100, 4),
+        sigmaFam(round(abs(nAll - p(b)) / p(b) * 100, 4),
           s"round(abs($nAllSql - $b)/$b*100, 4)",
           "Record count differs from baseline by more than the allowed percent.",
           T)
@@ -403,7 +412,7 @@ object TestEvaluator {
         // every baseline value must still occur (count of missing members)
         val values = TestDef.parseLov(d.pS("Baseline_Value"))
         countFam(
-          lit(values.size) - nDist(when(c.isin(values: _*), c)),
+          p(values.size.toDouble) - nDist(when(c.isin(values: _*), c)),
           s"(${values.size} - ${nDistSql(s"CASE WHEN ${inListSql(cs, values)} THEN $cs END")})",
           "Baseline values missing from the latest data.")
 
@@ -482,8 +491,8 @@ object TestEvaluator {
     require(defs.nonEmpty)
     val indexed = defs.map(compile(_, approxDistinct)).zipWithIndex
     // pass-plan memo (r15): the suite passes are a pure function of
-    // (input plan, defs, mode) — see graft.operators.PassMemo. Plans
-    // cached, results never; TestDef is a value class so the key
+    // (input plan, input files, defs, mode) — see
+    // graft.operators.PassMemo; TestDef is a value class so the key
     // compares by content.
     val passes = graft.operators.PassMemo.passes(
       df, (defs, approxDistinct))(suitePasses(df, indexed))
@@ -586,7 +595,7 @@ object TestEvaluator {
         lit(t.d.column).as("column_name"),
         lit(t.d.testType).as("test_type"),
         col(s"__m_$i").cast(D).as("measure"),
-        lit(t.threshold).as("threshold"),
+        p(t.threshold).as("threshold"),
         lit(t.family).as("family"),
         lit(t.op).as("op"),
         lit(t.message).as("message_raw"))

@@ -75,13 +75,15 @@ object RecallQueries {
     // cost ≈ its slowest chain instead of the sum. Results are sets
     // compared driver-side, so concurrency cannot reorder anything.
     import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     // 5 outer chains + the nested brute-force future; 8 threads so a
     // nested await can never exhaust the pool
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     implicit val ec: ExecutionContext =
       ExecutionContext.fromExecutorService(pool)
-    def await[A](f: Future[A]): A = Await.result(f, Duration.Inf)
+    // bounded like every pass pool: a wedged chain surfaces as a
+    // TimeoutException, never as a hung driver thread
+    val timeout = graft.operators.ConcurrentPasses.passTimeout(s)
+    def await[A](f: Future[A]): A = Await.result(f, timeout)
 
     // ---- minhash collapsed near-dup, per planted family ------------------
     // truth: exact pairwise shingle Jaccard within each family (planted

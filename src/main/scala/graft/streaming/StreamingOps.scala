@@ -784,6 +784,24 @@ object StreamingOps {
           .max(floor).min(par.max(floor)).toInt
       }
 
+  /** The gate-run checkpoint-checksum setting from its override
+    * (SPARK_GRAFT_CKPT_CHECKSUM): `true` or `false`, any case. Anything
+    * else is warned about and falls back to the default `false`, like
+    * the stream-parts override in [[streamGateParts]], instead of
+    * failing the conf set deep inside a gate run.
+    */
+  private[graft] def ckptChecksum(raw: Option[String]): String =
+    raw.flatMap { v =>
+      val b = v.trim.toLowerCase(java.util.Locale.ROOT)
+      if (b == "true" || b == "false") Some(b)
+      else {
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"ignoring invalid checkpoint-checksum override '$v' " +
+            "(needs true or false); using false")
+        None
+      }
+    }.getOrElse("false")
+
   /** Scope the gate-run streaming confs around a gate body. Same
     * conf-scoping discipline (shared lock, restore-on-exit) as
     * [[withStateStoreProvider]]; the lock is reentrant, so gates
@@ -815,7 +833,7 @@ object StreamingOps {
         "spark.sql.shuffle.partitions" ->
           streamGateParts(spark, srcBytes).toString,
         "spark.sql.streaming.checkpoint.fileChecksum.enabled" ->
-          sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
+          ckptChecksum(sys.env.get("SPARK_GRAFT_CKPT_CHECKSUM")))
       val prev = keyVals.map { case (k, _) => k -> spark.conf.getOption(k) }
       keyVals.foreach { case (k, v) => spark.conf.set(k, v) }
       try f

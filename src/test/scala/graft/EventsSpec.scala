@@ -122,6 +122,27 @@ class EventsSpec extends AnyFunSuite {
     assert(late(2L).getAs[Double]("minutes_late") == 180.0)
   }
 
+  test("minutes late/over round like DuckDB's round(x, 4): on the " +
+      "binary double, not on its shortest decimal rendering") {
+    // 9 245 499 000 µs / 6e7 = 154.09165 in decimal, 154.09164999… as a
+    // double: DuckDB gives 154.0916, Spark's round(_, 4) 154.0917
+    val x = lit(9245499000L) / lit(6.0e7)
+    val r = spark.range(1).select(EventOps.round4(x), round(x, 4)).head()
+    assert(r.getDouble(0) == 154.0916)
+    assert(r.getDouble(1) == 154.0917, "the tie this rounding exists for")
+    // the same µs gap end to end, 06:00 slot → 08:34:05.499 start
+    val ev = Seq((1L, ts("2024-01-01 08:34:05.499"), 1L, "signup", 1.0,
+      "{}")).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    def one(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select(c).as[Double].collect().toSeq
+    assert(one(EventOps.lateStarts(ev, "0 6 * * *", 600, spark),
+      "minutes_late") == Seq(154.0916))
+    assert(one(EventOps.lateStartsCron(ev, "0 6 * * *", 600, 3600, spark),
+      "minutes_late") == Seq(154.0916))
+    assert(one(EventOps.lateEndsCron(ev, "0 6 * * *", 0, 600, 3600, spark),
+      "minutes_over") == Seq(154.0916))
+  }
+
   test("cron lateness matches each run start to the nearest slot, " +
       "across midnight") {
     // user 3 starts a run at 01:00 — with an 18:00-only cron the governing

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.profile.{ColProfile, Profiler}
 
 object SparkTestSession {
@@ -361,13 +362,57 @@ class ProfilerSpec extends AnyFunSuite {
       assert(r == one, s"repartition($n): $r != $one")
     }
     // and through the profiler itself: fanned (default) vs fan-out
-    // disabled via the probe flag must produce identical profile rows
+    // disabled via the probe flag must produce identical profile rows —
+    // from DIFFERENT pass plans (the flag is part of the pass-plan memo
+    // key; were it not, the second arm would re-collect the first's)
     val li = spark.read.parquet(s"${SparkTestSession.sf}/lineitem.parquet")
+    val tag = Profiler.stdTag("exact", exactPercentiles = true)
+    def roundRobin(): Boolean =
+      graft.operators.PassMemo.passes(li, tag)(
+          fail("profile must memoize its passes"))
+        .exists(_.queryExecution.executedPlan.treeString
+          .contains("RoundRobinPartitioning"))
     val fanned = Profiler.profile(li, "lineitem").collect().toSeq
+    assert(roundRobin(), "the fanned arm fans its percentile passes out")
     System.setProperty("graft.fanout.off", "1")
     try {
       val plain = Profiler.profile(li, "lineitem").collect().toSeq
+      assert(!roundRobin(), "the plain arm must not reuse fanned passes")
       assert(fanned == plain)
     } finally System.clearProperty("graft.fanout.off")
+  }
+
+  test("a table rewritten in place is profiled and evaluated afresh in " +
+      "the same session (the pass-plan memo keys on the input files)") {
+    import java.nio.file.{Files, StandardCopyOption}
+    import graft.quality.{TestDef, TestEvaluator}
+    val dir = Files.createTempDirectory("graft-rewrite")
+    val live = dir.resolve("t.parquet")
+    // one parquet file replaced at the SAME path, as a scheduled
+    // refresh rewrites a table
+    def install(rows: Int): Unit = {
+      val out = dir.resolve(s"snap-$rows")
+      spark.range(rows).selectExpr("id", "CAST(id % 7 AS DOUBLE) AS x")
+        .coalesce(1).write.parquet(out.toString)
+      val part = Files.list(out).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.copy(part, live, StandardCopyOption.REPLACE_EXISTING)
+    }
+    def load() = spark.read.parquet(live.toString)
+    val rowCt = Seq(TestDef("t", "id", "Row_Ct",
+      Map("Threshold_Value" -> "0")))
+    def counts(): (Long, Double) = (
+      Profiler.profile(load(), "t").collect()
+        .map(_.getAs[Long]("record_ct")).distinct.toSeq match {
+        case Seq(n) => n
+        case ns => fail(s"record_ct differs across columns: $ns")
+      },
+      TestEvaluator.run(load(), rowCt).head().getAs[Double]("measure"))
+    install(100)
+    assert(counts() == ((100L, 100.0)))
+    assert(counts() == ((100L, 100.0)), "rerun over unchanged files")
+    install(150)
+    assert(counts() == ((150L, 150.0)), "the rewrite must not be served " +
+      "from plans built over the old file")
   }
 }

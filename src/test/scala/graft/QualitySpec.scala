@@ -59,6 +59,42 @@ class QualitySpec extends AnyFunSuite {
       .toSet.contains("LOV_All"))
   }
 
+  test("re-evaluating a suite whose baselines moved compiles no new " +
+      "code: baselines are run-time parameters, not inlined literals") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // every numeric or timestamp baseline and threshold moved, as a
+    // refresh re-profile moves them; LOVs and patterns kept
+    def shifted(k: Int): Seq[TestDef] = PinnedBaselines.lineitemDefs.map {
+      d => d.copy(params = d.params.map {
+        case (key, v) if key.startsWith("Baseline_") ||
+            key == "Threshold_Value" =>
+          key -> scala.util.Try(v.trim.toDouble).map(x =>
+              (x * (1 + 0.1 * k) + k).toString)
+            .orElse(scala.util.Try(java.sql.Timestamp.valueOf(v.trim))
+              .map(t => new java.sql.Timestamp(
+                t.getTime + k * 86400000L).toString))
+            .getOrElse(v)
+        case kv => kv
+      })
+    }
+    val df = Tables.load(spark, SparkTestSession.sf, "lineitem")
+    def thresholds(defs: Seq[TestDef]) =
+      TestEvaluator.run(df, defs).collect().map(r =>
+        (r.getAs[String]("column_name"), r.getAs[String]("test_type")) ->
+          r.getAs[Double]("threshold")).toMap
+    thresholds(shifted(1))
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val got = thresholds(shifted(2))
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiles == 0, s"$compiles classes recompiled for new baselines")
+    // ...and the new values did reach the plan
+    val want = shifted(2).map(TestEvaluator.compile(_)).map(t =>
+      (t.d.column, t.d.testType) -> t.threshold).toMap
+    assert(got == want)
+    assert(want != shifted(1).map(TestEvaluator.compile(_)).map(t =>
+      (t.d.column, t.d.testType) -> t.threshold).toMap)
+  }
+
   test("generator emits format tests when LOV evidence fits") {
     val df = Seq("a@x.com", "b@y.org", "a@x.com").toDF("email")
       .withColumn("state",

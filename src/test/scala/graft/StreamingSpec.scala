@@ -1030,6 +1030,18 @@ class StreamingSpec extends AnyFunSuite {
     assert(e.getMessage.contains("schema contract"))
     assert(e.getMessage.contains("ts"))
   }
+
+  test("checkpoint-checksum override accepts only true/false; anything " +
+      "else falls back to the default instead of failing a gate") {
+    assert(StreamingOps.ckptChecksum(None) == "false")
+    assert(StreamingOps.ckptChecksum(Some("true")) == "true")
+    assert(StreamingOps.ckptChecksum(Some(" TRUE ")) == "true")
+    assert(StreamingOps.ckptChecksum(Some("false")) == "false")
+    Seq("", "yes", "1", "on", "treu").foreach { v =>
+      assert(StreamingOps.ckptChecksum(Some(v)) == "false", v)
+    }
+  }
+
   test("time-sliced staging is memoized per (source content, nSlices): " +
       "a second gate on the same corpus stages ZERO Spark jobs, and a " +
       "content rewrite invalidates the entry") {
