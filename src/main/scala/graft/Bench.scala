@@ -137,8 +137,9 @@ object Bench {
       // The r5/r6 "blown window" was a symptom of the real bug — sbt's
       // forked-run logger prefixed the line with "[info] ", so the
       // driver's line-oriented json.loads never matched and only a
-      // truncated tail was ever inspected (parsed: null in BENCH_r10..
-      // r14). With `run / outputStrategy := StdoutOutput` (build.sbt)
+      // truncated tail was ever inspected (parsed: null in rounds 10-14;
+      // see git history for their BENCH_r*.json wrappers). With
+      // `run / outputStrategy := StdoutOutput` (build.sbt)
       // the line reaches stdout unprefixed and the driver parses the
       // full map; BENCH_FULL.json stays as the detail fallback (spread,
       // solo notes).

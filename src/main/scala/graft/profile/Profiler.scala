@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   * of ~50 statistics per input column, the one-row passes executed as
   * concurrent Spark actions and recombined into one LocalRelation row
   * (graft.operators.ConcurrentPasses — the r8 rework that replaced the
-  * serializing crossJoin/BNLJ spine), then `explode` to one profile row
-  * per column.
+  * serializing crossJoin/BNLJ spine), from which the driver builds one
+  * profile row per column.
   *
   * Scale notes (100 TB): every pass is a column-pruned scan + a one-row
   * partial-aggregate shuffle, so for an unfiltered table total bytes
@@ -101,8 +101,8 @@ object Profiler {
   /** [[profile]] with the distinct strategy and percentile exactness
     * DECOUPLED (the r5 advice: coupling them made the sampled-oracle mode
     * pay one exact countDistinct pass per column only to null the results
-    * at assembly — Catalyst cannot prune a crossJoined pass through the
-    * struct/explode recombination, so the waste was ~n narrow scans).
+    * at assembly — a pass runs whether or not the assembly reads its
+    * result, so the waste was ~n narrow scans).
     *
     *  - distincts = "exact": one narrow pass per column (+ per timestamp
     *    date) — the oracle-parity mode;
@@ -153,9 +153,10 @@ object Profiler {
     *    interpreted per row (measured ~20× at sf0.1). Quartiles ride
     *    narrow per-column passes of their own — maximally concurrent,
     *    and one shared codegen shape.
-    *  - Passes recombine through a BALANCED crossJoin tree (each side
-    *    one row): a left-deep foldLeft re-analyzed the accumulated plan
-    *    at every step, O(n²) in pass count.
+    *  - The passes' single rows concatenate into one LocalRelation row,
+    *    and the per-column result rows are built from it on the driver
+    *    (ConcurrentPasses.assembleRows): the result is a LocalRelation,
+    *    so reading it starts no Spark job.
     */
   private[graft] def profileWith(df: DataFrame, tableName: String,
                                  distincts: String,
@@ -188,9 +189,10 @@ object Profiler {
 
   /** PASS-PLAN memo (r15): see [[graft.operators.PassMemo]] — one
     * profile invocation spends ~2 s of pure DRIVER work building,
-    * analyzing and planning its ~31 fresh pass DataFrames (measured,
-    * tools/ProfInterleave: pre-built passes collect in 1.2-1.5 s where
-    * the full profile() takes 3.3-5.1 s on sf0.1 lineitem). A hit
+    * analyzing and planning its ~31 fresh pass DataFrames (measured by
+    * a round-15 probe, see git history: pre-built passes collect in
+    * 1.2-1.5 s where the full profile() takes 3.3-5.1 s on sf0.1
+    * lineitem). A hit
     * re-collects the memoized frames, reusing their materialized
     * shuffle stages; the memo key carries the input files' signature,
     * so a table rewritten in place is profiled afresh.
@@ -204,8 +206,8 @@ object Profiler {
     graft.operators.PassMemo.passes(df, tag)(build)
 
   /** Recombine the collected one-row pass results into the profile
-    * frame: one struct of ~50 statistics per column, exploded to one
-    * row per column. Split out of [[profileWith]] so the fused
+    * frame: one struct of ~50 statistics per column, built into one row
+    * per column on the driver. Split out of [[profileWith]] so the fused
     * approx-check ([[approxCheckFused]]) can assemble BOTH modes from
     * one shared set of collected passes.
     */
@@ -244,9 +246,8 @@ object Profiler {
            Seq(col(s"__sk_$i").as("distinct_sketch"))
          else Seq.empty): _*)
     }
-    agged.select(explode(array(structs: _*)).as("p"))
-      .select("p.*")
-      .orderBy("column_name")
+    graft.operators.ConcurrentPasses.assembleRows(agged, structs,
+      "column_name")
   }
 
   /** The mergeable-statistics profile of one slice, restricted to
@@ -582,12 +583,12 @@ object Profiler {
     */
   def mergeProfiles(a0: DataFrame, b0: DataFrame): DataFrame = {
     // materialize both inputs first: a profile is one row per column —
-    // control-plane data — but its PLAN is a tree of full-table
-    // aggregates, and joining two such trees re-evaluates the heavy
-    // subtrees (measured 33 s vs 0.3 s on sf0.1 lineitem). In the
-    // incremental posture the standing baseline is a stored artifact
-    // anyway; eager checkpoint makes the merge cost independent of the
-    // profiled data size.
+    // control-plane data — but an input may be any plan over it: an
+    // earlier merge (a join), a per-batch selection, or a caller's lazy
+    // frame. Without the checkpoint a fold of merges nests one join
+    // per step and re-evaluates every earlier step; eager checkpoint
+    // makes each merge cost independent of the fold's depth and of
+    // the plans behind its inputs.
     val a = a0.localCheckpoint(true)
     val b = b0.localCheckpoint(true)
     val bj = b.select(b.columns.toSeq.map(c => col(c).as(s"__b_$c")): _*)

@@ -152,16 +152,10 @@ object Quickstart {
         // LOV order (hence the generated LOV tests) must not change
         // with the derivation strategy or diverge from a
         // binary-collating oracle.
-        val utf8Order = new Ordering[String] {
-          def compare(a: String, b: String): Int = {
-            val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            java.util.Arrays.compareUnsigned(x, y)
-          }
-        }
         counts.groupBy(_.getString(0)).map { case (c, rows) =>
           c -> rows.sortBy(r => (-r.getLong(2), r.getString(1)))(
-              Ordering.Tuple2(Ordering.Long, utf8Order))
+              Ordering.Tuple2(Ordering.Long,
+                graft.operators.ConcurrentPasses.Utf8Order))
             .map(_.getString(1)).toSeq
         }
       }

@@ -27,8 +27,9 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, StringType}
   *
   * Distinct-counting measures (Unique, Unique_Pct, Distinct_Value_Ct,
   * Distinct_Date_Ct, and the weekly-monthly gap tests) are split into ONE
-  * EXTRA PASS PER DISTINCT EXPRESSION and the
-  * one-row results recombined with crossJoin. Rationale: k distinct
+  * EXTRA PASS PER DISTINCT EXPRESSION, the passes run as concurrent
+  * actions, and the driver assembles the result rows from their one-row
+  * results (graft.operators.ConcurrentPasses). Rationale: k distinct
   * aggregates in a single agg() make Catalyst plan an Expand that replicates
   * EVERY input row k+1 times (the r1 dq_autogen query spent 119 s there at
   * sf0.1 — a guaranteed scale-killer at 100 TB). With one distinct
@@ -482,9 +483,10 @@ object TestEvaluator {
     * rows recombined into one LocalRelation row
     * (graft.operators.ConcurrentPasses — the same rework that removed
     * the Profiler's serializing crossJoin/BNLJ spine in r8; values
-    * bit-identical, only the recombination operator changed). EAGER:
-    * the passes execute at call time; callers that only want the pass
-    * PLANS use [[suitePasses]].
+    * bit-identical, only the recombination operator changed), from
+    * which the driver builds the result rows. EAGER: the passes execute
+    * at call time; callers that only want the pass PLANS use
+    * [[suitePasses]].
     */
   def run(df: DataFrame, defs: Seq[TestDef],
           approxDistinct: Boolean = false): DataFrame = {
@@ -578,17 +580,20 @@ object TestEvaluator {
   }
 
   /** Recombine the collected one-row measures (columns `__m_<i>` +
-    * `__rc`) into the per-test result frame. Split out of [[run]] so
-    * the fused approx-check ([[approxCheckFused]]) can assemble BOTH
-    * modes from one shared set of collected passes.
+    * `__rc`) into the per-test result frame, built on the driver
+    * (ConcurrentPasses.assembleRows) so reading it starts no Spark job.
+    * Split out of [[run]] so the fused approx-check
+    * ([[approxCheckFused]]) can assemble BOTH modes from one shared set
+    * of collected passes.
     */
   private def assemble(agged: DataFrame,
                        indexed: Seq[(Compiled, Int)]): DataFrame = {
     // Per-test structs carry only literals + the measure reference; the
-    // status/message/result_expr logic is applied ONCE generically after
-    // the explode (keyed by the test's comparison family). Inlining that
-    // logic per test made the projection a ~3000-node expression tree that
-    // cost more driver planning time than the whole suite's execution.
+    // status/message/result_expr logic is applied ONCE generically over
+    // the assembled rows (keyed by the test's comparison family).
+    // Inlining that logic per test made the projection a ~3000-node
+    // expression tree that cost more driver planning time than the
+    // whole suite's execution.
     val structs = indexed.map { case (t, i) =>
       struct(
         lit(t.d.table).as("table_name"),
@@ -598,28 +603,26 @@ object TestEvaluator {
         p(t.threshold).as("threshold"),
         lit(t.family).as("family"),
         lit(t.op).as("op"),
-        lit(t.message).as("message_raw"))
+        lit(t.message).as("message_raw"),
+        col("__rc").as("rc"))
     }
-    val m = col("r.measure"); val thr = col("r.threshold")
-    val status = when(col("r.family") === "count",
-        statusExpr("count", m, thr, col("__rc")))
-      .when(col("r.family") === "floor", statusExpr("floor", m, thr,
-        col("__rc")))
-      .otherwise(statusExpr("sigma", m, thr, col("__rc")))
-    agged.select(explode(array(structs: _*)).as("r"), col("__rc"))
+    val m = col("measure"); val thr = col("threshold"); val rc = col("rc")
+    val status = when(col("family") === "count",
+        statusExpr("count", m, thr, rc))
+      .when(col("family") === "floor", statusExpr("floor", m, thr, rc))
+      .otherwise(statusExpr("sigma", m, thr, rc))
+    // a projection over the assembled LocalRelation: folded on the
+    // driver as well
+    graft.operators.ConcurrentPasses
+      .assembleRows(agged, structs, "column_name", "test_type")
       .select(
-        col("r.table_name").as("table_name"),
-        col("r.column_name").as("column_name"),
-        col("r.test_type").as("test_type"),
-        m.as("measure"),
-        thr.as("threshold"),
+        col("table_name"), col("column_name"), col("test_type"), m, thr,
         status.as("status"),
         when(status === "PASSED", lit(null).cast(StringType))
-          .otherwise(col("r.message_raw")).as("message"),
+          .otherwise(col("message_raw")).as("message"),
         when(m.isNull, lit(null).cast(StringType))
-          .otherwise(concat(format_string("%.4f", m), lit(" "), col("r.op"),
+          .otherwise(concat(format_string("%.4f", m), lit(" "), col("op"),
             lit(" "), format_string("%.4f", thr))).as("result_expr"))
-      .orderBy("column_name", "test_type")
   }
 
   /** Test types whose measures ride the HLL distinct sketches in

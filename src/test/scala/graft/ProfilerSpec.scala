@@ -415,4 +415,62 @@ class ProfilerSpec extends AnyFunSuite {
     assert(counts() == ((150L, 150.0)), "the rewrite must not be served " +
       "from plans built over the old file")
   }
+
+  test("profile results are built on the driver: reading them twice " +
+      "starts no Spark job") {
+    val odd = SparkJobs.oddFrame(spark)
+    val orders = Tables.load(spark, SparkTestSession.sf, "orders")
+    val lineitem = Tables.load(spark, SparkTestSession.sf, "lineitem")
+    val frames = Seq(Profiler.profile(odd, "odd"),
+        Profiler.profile(odd, "odd", exactDistinct = false),
+        Profiler.profileMergeable(odd, "odd", withSketch = true),
+        Profiler.profileSampled(orders, "orders", 0.5)) ++
+      Profiler.profileMany(Seq(orders -> "orders", lineitem -> "lineitem"))
+    val (rows, jobs) = SparkJobs.during(spark) {
+      frames.map { f =>
+        val once = f.collect().toSeq
+        assert(f.collect().toSeq == once)
+        once
+      }
+    }
+    assert(jobs == 0, s"collecting the profile frames started $jobs jobs")
+    assert(rows.map(_.size) == Seq(8, 8, 8, orders.columns.length,
+      orders.columns.length, lineitem.columns.length))
+    // the generator reads the same frames
+    assert(SparkJobs.during(spark)(ColProfile.fromRows(frames.last))._2 == 0)
+  }
+
+  test("profile rows keep the explode form's schema and Spark's orderBy " +
+      "order for mixed-case, non-ASCII and non-BMP column names") {
+    val p = Profiler.profile(SparkJobs.oddFrame(spark), "odd")
+    // the schema the former explode(array(structs)).select("p.*") gave
+    val want = """table_name:string:false column_name:string:false
+      |ordinal:bigint:false data_type:string:false record_ct:bigint:false
+      |value_ct:bigint:false null_ct:bigint:false distinct_ct:bigint:false
+      |min_len:bigint:true max_len:bigint:true avg_len:double:true
+      |blank_ct:bigint:true min_str:string:true max_str:string:true
+      |min_num:double:true max_num:double:true avg_num:double:true
+      |stdev_num:double:true sum_num:double:true frac_sum:double:true
+      |zero_ct:bigint:true neg_ct:bigint:true min_ts:timestamp:true
+      |max_ts:timestamp:true embedded_space_ct:bigint:true
+      |upper_ct:bigint:true lower_ct:bigint:true numeric_str_ct:bigint:true
+      |date_str_ct:bigint:true pos_ct:bigint:true frac_value_ct:bigint:true
+      |future_ct:bigint:true weekend_ct:bigint:true
+      |lead_space_ct:bigint:true quote_ct:bigint:true
+      |non_ascii_ct:bigint:true alpha_ct:bigint:true boolean_ct:bigint:true
+      |email_ct:bigint:true zip_ct:bigint:true dummy_ct:bigint:true
+      |avg_words:double:true p25_num:double:true median_num:double:true
+      |p75_num:double:true skew_num:double:true kurt_num:double:true
+      |range_num:double:true cv_num:double:true round_num_ct:bigint:true
+      |midnight_ct:bigint:true work_hours_ct:bigint:true
+      |span_days:bigint:true recency_days:bigint:true
+      |distinct_date_ct:bigint:true""".stripMargin.split("\\s+").toSeq
+    assert(SparkJobs.schemaOf(p) == want)
+    val got = p.collect().map(_.getAs[String]("column_name")).toSeq
+    assert(got == p.orderBy("column_name").collect()
+      .map(_.getAs[String]("column_name")).toSeq)
+    assert(got.toSet == SparkJobs.OddNames.toSet)
+    // the fixture tells UTF-8 byte order from Java String order
+    assert(got != SparkJobs.OddNames.sorted)
+  }
 }

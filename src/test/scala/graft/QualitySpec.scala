@@ -426,4 +426,44 @@ class QualitySpec extends AnyFunSuite {
       .map(_.getAs[String]("status")).toSet
     assert(st == Set("PASSED"))
   }
+
+  private def oddDefs: Seq[TestDef] = SparkJobs.OddNames.flatMap(n => Seq(
+    TestDef("odd", n, "Required", Map("Threshold_Value" -> "0")),
+    TestDef("odd", n, "Row_Ct", Map("Threshold_Value" -> "30")),
+    TestDef("odd", n, "Distinct_Value_Ct", Map("Threshold_Value" -> "5"))))
+
+  test("evaluator results are built on the driver: reading them twice " +
+      "starts no Spark job") {
+    val odd = SparkJobs.oddFrame(spark)
+    val orders = Tables.load(spark, SparkTestSession.sf, "orders")
+    val orderDefs = TestGenerator.generate(Profiler.profile(orders, "orders"))
+    val frames = Seq(TestEvaluator.run(odd, oddDefs),
+        TestEvaluator.run(odd, oddDefs, approxDistinct = true)) ++
+      TestEvaluator.runMany(Seq(odd -> oddDefs, orders -> orderDefs))
+    val (rows, jobs) = SparkJobs.during(spark) {
+      frames.map { f =>
+        val once = f.collect().toSeq
+        assert(f.collect().toSeq == once)
+        once
+      }
+    }
+    assert(jobs == 0, s"collecting the evaluator frames started $jobs jobs")
+    assert(rows.map(_.size) == Seq(24, 24, 24, orderDefs.size))
+  }
+
+  test("evaluator rows keep the explode form's schema and Spark's " +
+      "orderBy order for mixed-case, non-ASCII and non-BMP column names") {
+    val out = TestEvaluator.run(SparkJobs.oddFrame(spark), oddDefs)
+    // the schema the former explode + status projection gave
+    assert(SparkJobs.schemaOf(out) == Seq("table_name:string:false",
+      "column_name:string:false", "test_type:string:false",
+      "measure:double:false", "threshold:double:false",
+      "status:string:false", "message:string:true",
+      "result_expr:string:true"))
+    def keys(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(r => (r.getAs[String]("column_name"), r.getAs[String]("test_type")))
+    val got = keys(out)
+    assert(got == keys(out.orderBy("column_name", "test_type")))
+    assert(got.map(_._1).distinct != SparkJobs.OddNames.sorted)
+  }
 }
