@@ -367,18 +367,17 @@ object JpegQueries {
     import s.implicits._
     import org.apache.spark.sql.types.{LongType, StringType}
     val schema = Tables.load(s, dir, "documents").schema
-    graft.streaming.StreamingOps.boundedStreamRun(s,
-      s"$dir/documents.parquet",
-      drop => {
+    graft.streaming.StreamGate("mixed_ingest_bounded", s"$dir/documents.parquet",
+      (gs, drop) => {
         val bucket = conv(substring(md5(col("doc_id").cast(StringType)),
           1, 6), 16, 10).cast(LongType) % 100
-        s.readStream.schema(schema).parquet(drop)
+        gs.readStream.schema(schema).parquet(drop)
           .filter(bucket >= TextQueries.IncrSplit)
           .select(col("doc_id")).as[Long]
           .mapPartitions(_.map(mixedRow))
           .toDF("doc_id", "format", "status", "reason", "stat")
       },
-      sink => sink.orderBy("doc_id"))
+      d => d.rows.orderBy("doc_id")).run(s)
   }
 
   /** The 0-99 split bucket of a given doc-id column expression — the

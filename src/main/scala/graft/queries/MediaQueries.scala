@@ -609,12 +609,11 @@ object MediaQueries {
     import org.apache.spark.sql.types.{LongType, StringType}
     val schema = Tables.load(s, dir, "documents").schema
     val corpus = corpusMediaBandsMemo(s, dir)
-    graft.streaming.StreamingOps.boundedStreamRun(s,
-      s"$dir/documents.parquet",
-      drop => {
+    graft.streaming.StreamGate("media_ingest_bounded", s"$dir/documents.parquet",
+      (gs, drop) => {
         val bucket = conv(substring(md5(col("doc_id").cast(StringType)),
           1, 6), 16, 10).cast(LongType) % 100
-        s.readStream.schema(schema).parquet(drop)
+        gs.readStream.schema(schema).parquet(drop)
           .filter(bucket >= TextQueries.IncrSplit)
           .select(col("doc_id")).as[Long]
           .mapPartitions(_.map { d =>
@@ -661,7 +660,8 @@ object MediaQueries {
           .select("doc_id", "decode_status", "reason", "corpus_id",
             "hamming")
       },
-      sink => {
+      d => {
+        val sink = d.rows
         // per-doc verdict: the exact-verified best match (min by
         // (hamming, corpus_id) — partition-layout-independent)
         val best = min(when(col("hamming") <= NdMaxHamming,
@@ -677,7 +677,7 @@ object MediaQueries {
             col("m.corpus_id").as("dup_of"),
             col("m.hamming").as("hamming"))
           .orderBy("doc_id")
-      })
+      }).run(s)
   }
 
   /** Oracle: the shared band CTEs over all docs, then the BIPARTITE

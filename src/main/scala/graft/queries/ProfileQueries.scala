@@ -66,7 +66,7 @@ object ProfileQueries {
     * law, over the events drop-folder replay.
     */
   private def streamProfileBounded(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamingOps.profileSummariesBounded(s, dir)
+    graft.streaming.StreamingOps.profileSummariesBounded(dir).run(s)
 
   /** The incremental profiler killed after 2 of 4 staged files and
     * resumed from its checkpoint, with the fold keyed by batchId so a
@@ -76,7 +76,7 @@ object ProfileQueries {
     * or double-counted across the restart.
     */
   private def streamProfileRestart(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamingOps.profileSummariesRestart(s, dir)
+    graft.streaming.StreamingOps.profileSummariesRestart(dir).run(s)
 
   private val streamProfileSql: String =
     s"""SELECT ${Profiler.MergeableFields.mkString(", ")}
@@ -95,7 +95,7 @@ object ProfileQueries {
       : DataFrame = {
     import org.apache.spark.sql.functions._
     val fold = graft.streaming.StreamingOps
-      .profileSummariesBounded(s, dir, withSketch = true)
+      .profileSummariesBounded(dir, withSketch = true).run(s)
       .select(col("column_name"),
         hll_sketch_estimate(col("distinct_sketch")).as("sketch_est"))
     val exact = Profiler.profile(Tables.load(s, dir, "events"), "events")

@@ -926,33 +926,16 @@ object TextQueries {
     */
   def curatedStreamBounded(s: SparkSession, dir: String): DataFrame = {
     val schema = Tables.load(s, dir, "documents").schema
-    graft.streaming.StreamingOps.boundedStreamRun(s,
-      s"$dir/documents.parquet",
-      drop => graft.streaming.StreamingOps.curateStream(
-        s.readStream.schema(schema).parquet(drop)
+    graft.streaming.StreamGate("curate_bounded", s"$dir/documents.parquet",
+      (gs, drop) => graft.streaming.StreamingOps.curateStream(
+        gs.readStream.schema(schema).parquet(drop)
           .withColumn("ts", org.apache.spark.sql.functions.expr(
             "timestampadd(SECOND, doc_id, timestamp'2024-01-01 00:00:00')")),
         "text", "ts", Curation.DefaultMinScore,
         watermarkDelay = "365 days"),
-      sink => sink.select("content_hash").orderBy("content_hash"))
+      d => d.rows.select("content_hash").orderBy("content_hash")).run(s)
   }
 
-  /** Streaming benchmark decontamination — the ingest-path twin of
-    * [[contaminationBloomDocs]], under the SAME DuckDB oracle: the
-    * Bloom bitset is built ONCE from the benchmark (control-plane,
-    * before the stream starts), then every micro-batch runs a fully
-    * STATELESS pipeline — in-row distinct shingles, explode, the
-    * codegen'd Bloom probe as a plain filter, and a stream-static
-    * verify join against the exact benchmark shingle set. Per-document
-    * totals assemble in `summarize` over the drained sink (each doc
-    * lives wholly in one batch, so no cross-batch state is ever
-    * needed — the reason this monitor can run without watermarks).
-    * Sink rows are one base row per doc + one row per VERIFIED
-    * contaminated shingle (bloom-gated, so the fpp sliver never reaches
-    * the sink); the production path would land them in the
-    * ParquetMergeSink keyed by (doc_id, shingle) instead of the
-    * bounded-gate memory sink.
-    */
   /** Memoized standing-corpus / benchmark artifacts shared by the
     * streaming ingest gates (decontam / neardup / front door): the
     * benchmark shingle set + its Bloom bitset, and the corpus-side
@@ -1043,42 +1026,46 @@ object TextQueries {
       CorpusIndex(ch, hot, postings)
     }
 
+  /** Streaming benchmark decontamination — the ingest-path twin of
+    * [[contaminationBloomDocs]], under the SAME DuckDB oracle: the
+    * Bloom bitset is built ONCE from the benchmark (control-plane,
+    * before the stream starts), then every micro-batch runs a fully
+    * STATELESS pipeline — in-row distinct shingles, explode, the
+    * codegen'd Bloom probe as a plain filter, and a stream-static
+    * verify join against the exact benchmark shingle set. Each doc
+    * lives wholly in one batch, so no cross-batch state is ever needed
+    * (the reason this monitor can run without watermarks) and the
+    * per-document totals are aggregated per batch into the keyed
+    * parquet MERGE sink. That is the production posture and a measured
+    * necessity here: the synthetic corpus is HEAVILY contaminated, so a
+    * per-hit evidence stream pushes ~1M rows through a driver-side
+    * memory sink at ~6 µs/row (~7-9 s, with the probe/join measured
+    * free; the probe is in git history).
+    */
   def contaminationStreamBounded(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{array_distinct, coalesce, count, explode, expr, round, size, split, trim}
-    import org.apache.spark.sql.DataFrame
     val all = Tables.load(s, dir, "documents")
     val schema = all.schema
     val bs = benchShinglesMemo(s, dir, ShingleN)
     val bloom = benchBloomMemo(s, dir, ShingleN)
     val joined = (0 until ShingleN).map(j => s"words[i + $j]")
       .mkString(", ")
-    // Delivery is per-batch foreachBatch aggregation into the keyed
-    // parquet MERGE sink — the production posture, and a measured
-    // necessity here: the synthetic corpus is HEAVILY contaminated
-    // (most docs share template shingles with the benchmark slice), so
-    // a per-hit evidence stream pushes ~1M rows through a driver-side
-    // memory sink at ~6 µs/row (DecontamProbe: the memory-sink variant
-    // held at ~7-9 s with the probe/join measured free; per-batch
-    // aggregation is exact because every doc lives wholly in one
-    // batch). Replay overwrites its own batchId-keyed delta, so the
-    // gate keeps the at-least-once idempotence of its siblings.
-    graft.streaming.StreamingOps.boundedDropRun(s,
-      s"$dir/documents.parquet") { (drop, ckpt) =>
-      val sinkDir = java.nio.file.Files
-        .createTempDirectory("graft-decontam-sink")
-      val sink = new graft.streaming.ParquetMergeSink(s, sinkDir.toString,
-        Seq("doc_id"))
-      val q = s.readStream.schema(schema).parquet(drop)
+    graft.streaming.StreamGate("decontam_bounded", s"$dir/documents.parquet",
+      (gs, drop) => gs.readStream.schema(schema).parquet(drop)
         .filter(col("doc_id") >= BenchSplit)
         .select(col("doc_id"),
           split(trim(col("text")), "\\s+").as("words"))
         .filter(size(col("words")) >= ShingleN)
         .select(col("doc_id"), array_distinct(expr(
           s"transform(slice(words, 1, size(words) - ${ShingleN - 1})," +
-            s" (w, i) -> concat_ws(' ', $joined))")).as("shs"))
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
+            s" (w, i) -> concat_ws(' ', $joined))")).as("shs")),
+      d => d.rows
+        .select(col("doc_id"), col("n_shingles"), col("n_contaminated"),
+          round(col("n_contaminated").cast("double") / col("n_shingles"),
+            4).as("contamination"))
+        .orderBy("doc_id"),
+      sink = graft.streaming.StreamGate.Sink.Merge(Seq("doc_id"),
+        (batch, _) => {
           val base = batch.select(col("doc_id"),
             size(col("shs")).cast("long").as("n_shingles"))
           val hits = batch
@@ -1087,27 +1074,11 @@ object TextQueries {
             .join(bs, "shingle") // exact verify kills the fpp sliver
             .groupBy(col("doc_id"))
             .agg(count(lit(1)).as("n_contaminated"))
-          sink.merge(base.join(hits, Seq("doc_id"), "left_outer")
+          base.join(hits, Seq("doc_id"), "left_outer")
             .select(col("doc_id"), col("n_shingles"),
               coalesce(col("n_contaminated"), lit(0L))
-                .as("n_contaminated")), id)
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val out = sink.read()
-        .select(col("doc_id"), col("n_shingles"), col("n_contaminated"),
-          round(col("n_contaminated").cast("double") / col("n_shingles"),
-            4).as("contamination"))
-        .orderBy("doc_id")
-        .localCheckpoint(true) // materialize before the sink dir dies
-      val walk = java.nio.file.Files.walk(sinkDir)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toSeq.reverse
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } finally walk.close()
-      out
-    }
+                .as("n_contaminated"))
+        })).run(s)
   }
 
   /** Streaming ingest dedup — the micro-batch twin of
@@ -1145,10 +1116,9 @@ object TextQueries {
     val postings = idx.postings
     val joined = (0 until ShingleN).map(j => s"words[i + $j]")
       .mkString(", ")
-    graft.streaming.StreamingOps.boundedStreamRun(s,
-      s"$dir/documents.parquet",
-      drop => {
-        val batchDocs = s.readStream.schema(schema).parquet(drop)
+    graft.streaming.StreamGate("neardup_bounded", s"$dir/documents.parquet",
+      (gs, drop) => {
+        val batchDocs = gs.readStream.schema(schema).parquet(drop)
           .filter(bucket >= IncrSplit)
         val base = batchDocs
           .select(col("doc_id"),
@@ -1176,7 +1146,8 @@ object TextQueries {
             col("corpus_id"), col("nc"))
         base.unionByName(shRows).unionByName(hits)
       },
-      sink => {
+      d => {
+        val sink = d.rows
         // The three evidence families all derive from ONE memory-sink
         // view, so every join below is a self-join — re-alias the keys
         // (fresh ExprIds) to keep the references unambiguous.
@@ -1201,7 +1172,7 @@ object TextQueries {
               .when(col("is_near"), "near_dup")
               .otherwise("new").as("status"))
           .orderBy("doc_id")
-      })
+      }).run(s)
   }
 
   /** Fused streaming ingest front door — ONE stream runs every
@@ -1254,10 +1225,9 @@ object TextQueries {
         s"transform(slice(words, 1, size(words) - ${n - 1}), " +
           s"(w, i) -> concat_ws(' ', $joined))"))
     }
-    graft.streaming.StreamingOps.boundedStreamRun(s,
-      s"$dir/documents.parquet",
-      drop => {
-        val batchDocs = s.readStream.schema(schema).parquet(drop)
+    graft.streaming.StreamGate("ingest_bounded", s"$dir/documents.parquet",
+      (gs, drop) => {
+        val batchDocs = gs.readStream.schema(schema).parquet(drop)
           .filter(bucket >= IncrSplit)
         val withWords = batchDocs.select(col("doc_id"), col("text"),
           split(trim(col("text")), "\\s+").as("words"))
@@ -1304,7 +1274,8 @@ object TextQueries {
             col("nc")): _*)
         base.unionByName(contamHits).unionByName(shRows).unionByName(hits)
       },
-      sink => {
+      d => {
+        val sink = d.rows
         // Same self-join discipline as the neardup gate: every frame
         // below derives from one sink view — re-alias the join keys.
         val base = sink.filter(col("kind") === "base")
@@ -1342,7 +1313,7 @@ object TextQueries {
                 frac >= Curation.DefaultMaxContam, "contaminated")
               .otherwise("admit").as("decision"))
           .orderBy("doc_id")
-      })
+      }).run(s)
   }
 
   /** Oracle: the same stage mirrors the funnel / incremental /
@@ -1746,10 +1717,9 @@ object TextQueries {
     val bucket = conv(substring(md5(col("doc_id").cast(StringType)), 1, 6),
       16, 10).cast(LongType) % 100
     val corpusMin = corpusBlockMinMemo(s, dir, SpanN)
-    graft.streaming.StreamingOps.boundedStreamRun(s,
-      s"$dir/documents.parquet",
-      drop => {
-        val batch = s.readStream.schema(schema).parquet(drop)
+    graft.streaming.StreamGate("blockdedup_bounded", s"$dir/documents.parquet",
+      (gs, drop) => {
+        val batch = gs.readStream.schema(schema).parquet(drop)
           .filter(bucket >= IncrSplit)
         batch
           .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
@@ -1763,7 +1733,8 @@ object TextQueries {
           .select(col("doc_id"), col("pos").cast(LongType).as("pos"),
             col("block"), col("bh"), col("cmin_doc"), col("cmin_pos"))
       },
-      sink => {
+      d => {
+        val sink = d.rows
         // global first occurrence = first within the new set AND ahead
         // of the corpus minimum (splits are disjoint, so no ties)
         val w = Window.partitionBy("bh").orderBy(col("doc_id"), col("pos"))
@@ -1780,7 +1751,7 @@ object TextQueries {
                 "struct(pos, block) END)), s -> s.block)"))
               .as("text_deduped"))
           .orderBy("doc_id")
-      })
+      }).run(s)
   }
 
   /** The batch [[blockDedupSql]] ranking over the WHOLE corpus, output

@@ -1,8 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.{CollectionAccumulator, LongAccumulator}
+
+import StreamGate.{Drained, Leg, Sink, Staging}
 
 /** Event as it arrives on the stream (the Observability event families
   * collapse to this shape for the harness — SURVEY.md §1.2).
@@ -459,72 +467,79 @@ object StreamingOps {
     * nullable columns (`completed`/`payload_ct`/`n_payloads`) are
     * derived in the tail from the same broadcast condition dimension.
     */
-  def journeysMultiBounded(spark: SparkSession, sfDir: String,
+  def journeysMultiBounded(sfDir: String,
                            journeys: Seq[graft.events.EventOps
-                             .JourneySpec]): DataFrame = {
-    import spark.implicits._
-    val memberDf = journeys
-      .flatMap(j => j.members.map(j.journeyId -> _))
-      .toDF("journey_id", "event_type")
-    val condDim = journeys.map(j => (j.journeyId, j.endType.orNull,
-        j.payloadRequired, j.payloadType.orNull))
-      .toDF("j_id", "end_type", "payload_req", "payload_type")
+                             .JourneySpec]): StreamGate = {
     val conds = journeys.map(j =>
       j.journeyId -> ((j.startType, j.endType, j.payloadRequired))).toMap
-    boundedStreamRun(spark, s"$sfDir/events.parquet",
-      drop => assignInstancesMulti(
-        eventStream(spark, drop)
-          .join(broadcast(memberDf), "event_type")
-          .select(col("journey_id"), col("event_id"), col("ts"),
-            col("user_id"), col("event_type"),
-            get_json_object(col("props"), "$.k").cast("long").as("k"))
-          .as[JIEvent],
-        conds).toDF(),
-      sink => sink
-        .join(broadcast(condDim), col("journey_id") === col("j_id"))
-        .groupBy(col("journey_id"), col("user_id"), col("instance_id"))
-        .agg(
-          min(col("ts")).as("instance_start"),
-          max(col("ts")).as("instance_end"),
-          count(lit(1)).as("n_events"),
-          first(col("end_type")).as("__et"),
-          first(col("payload_req")).as("__pr"),
-          (max(when(col("is_end"), 1).otherwise(0)) === 1).as("__cmax"),
-          max(when(col("is_end"), col("k"))).as("__pct"),
-          count(when(col("event_type") === col("payload_type"), 1))
-            .as("__npay"))
-        .select(col("journey_id"), col("user_id"), col("instance_id"),
-          col("instance_start"), col("instance_end"), col("n_events"),
-          when(col("__et").isNotNull, col("__cmax")).as("completed"),
-          when(col("__pr"), col("__pct")).as("payload_ct"),
-          when(col("__et").isNull, col("__npay")).as("n_payloads"))
-        .orderBy("journey_id", "user_id", "instance_id"))
+    StreamGate("journeys_multi_bounded", events(sfDir),
+      (s, drop) => {
+        import s.implicits._
+        val memberDf = journeys
+          .flatMap(j => j.members.map(j.journeyId -> _))
+          .toDF("journey_id", "event_type")
+        assignInstancesMulti(
+          eventStream(s, drop)
+            .join(broadcast(memberDf), "event_type")
+            .select(col("journey_id"), col("event_id"), col("ts"),
+              col("user_id"), col("event_type"),
+              get_json_object(col("props"), "$.k").cast("long").as("k"))
+            .as[JIEvent],
+          conds).toDF()
+      },
+      d => {
+        val s = d.session
+        import s.implicits._
+        val condDim = journeys.map(j => (j.journeyId, j.endType.orNull,
+            j.payloadRequired, j.payloadType.orNull))
+          .toDF("j_id", "end_type", "payload_req", "payload_type")
+        d.rows
+          .join(broadcast(condDim), col("journey_id") === col("j_id"))
+          .groupBy(col("journey_id"), col("user_id"), col("instance_id"))
+          .agg(
+            min(col("ts")).as("instance_start"),
+            max(col("ts")).as("instance_end"),
+            count(lit(1)).as("n_events"),
+            first(col("end_type")).as("__et"),
+            first(col("payload_req")).as("__pr"),
+            (max(when(col("is_end"), 1).otherwise(0)) === 1).as("__cmax"),
+            max(when(col("is_end"), col("k"))).as("__pct"),
+            count(when(col("event_type") === col("payload_type"), 1))
+              .as("__npay"))
+          .select(col("journey_id"), col("user_id"), col("instance_id"),
+            col("instance_start"), col("instance_end"), col("n_events"),
+            when(col("__et").isNotNull, col("__cmax")).as("completed"),
+            when(col("__pr"), col("__pct")).as("payload_ct"),
+            when(col("__et").isNull, col("__npay")).as("n_payloads"))
+          .orderBy("journey_id", "user_id", "instance_id")
+      })
   }
 
   /** Bounded END-TO-END run of the streaming multi-journey detector,
     * shaped to (and gated by) the same oracle as the batch
     * `ev_oos_multi`.
     */
-  def oosMultiAlertsBounded(spark: SparkSession, sfDir: String,
-                            gapSeconds: Long,
+  def oosMultiAlertsBounded(sfDir: String, gapSeconds: Long,
                             journeys: Seq[(String,
-                              Seq[graft.events.Dag.Edge])]): DataFrame = {
-    import spark.implicits._
-    val memberDf = journeys
-      .flatMap { case (j, es) => graft.events.Dag.members(es).map(j -> _) }
-      .toDF("journey_id", "event_type")
+                              Seq[graft.events.Dag.Edge])]): StreamGate = {
     val closures = journeys.map { case (j, es) =>
       j -> graft.events.Dag
         .closureLocal(graft.events.Dag.orderedPairs(es)).toSet
     }.toMap
-    boundedStreamRun(spark, s"$sfDir/events.parquet",
-      drop => detectOutOfSequenceMulti(
-        eventStream(spark, drop)
-          .join(broadcast(memberDf), "event_type")
-          .select(col("journey_id"), col("event_id"), col("ts"),
-            col("user_id"), col("event_type")).as[JEvent],
-        gapSeconds, closures).toDF(),
-      sink => sink
+    StreamGate("oos_multi_bounded", events(sfDir),
+      (s, drop) => {
+        import s.implicits._
+        val memberDf = journeys
+          .flatMap { case (j, es) => graft.events.Dag.members(es).map(j -> _) }
+          .toDF("journey_id", "event_type")
+        detectOutOfSequenceMulti(
+          eventStream(s, drop)
+            .join(broadcast(memberDf), "event_type")
+            .select(col("journey_id"), col("event_id"), col("ts"),
+              col("user_id"), col("event_type")).as[JEvent],
+          gapSeconds, closures).toDF()
+      },
+      d => d.rows
         .select(col("journey_id"), col("user_id"), col("session_id"),
           col("event_id"), col("ts"), col("prev_type"),
           col("event_type"), lit("OUT_OF_SEQUENCE").as("alert_type"))
@@ -615,20 +630,26 @@ object StreamingOps {
                                committed: java.util.Set[java.lang.Long] =
                                  java.util.concurrent.ConcurrentHashMap
                                    .newKeySet[java.lang.Long]())
-      (send: (graft.sources.Sources.ChunkKey,
-              Seq[org.apache.spark.sql.Row]) => Unit)
+      (send: (graft.sources.Sources.ChunkKey, Seq[Row]) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
     alerts.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!committed.contains(id)) {
-          graft.sources.Sources.foreachBatchedKeyed(batch, batchSize,
-            id)(send)
-          committed.add(id)
-          ()
-        }
-      }
+      .foreachBatch(idempotentDelivery(batchSize, committed)(send))
       .start()
+
+  /** The foreachBatch body of [[deliverBatchedIdempotent]]: keyed chunks,
+    * skipping batch ids `committed` already holds, and marking an id
+    * only after its delivery returned.
+    */
+  def idempotentDelivery(batchSize: Int,
+                         committed: java.util.Set[java.lang.Long])
+      (send: (graft.sources.Sources.ChunkKey, Seq[Row]) => Unit)
+      : (DataFrame, Long) => Unit =
+    (batch, id) =>
+      if (!committed.contains(id)) {
+        graft.sources.Sources.foreachBatchedKeyed(batch, batchSize, id)(send)
+        committed.add(id)
+      }
 
   /** Read a drop-folder of event parquet files as a stream (one file per
     * trigger) — the smoke path for wiring the ops above to a real file
@@ -656,228 +677,81 @@ object StreamingOps {
     graft.Tables.normalize(raw, "events")
   }
 
-  private val boundedRuns = new java.util.concurrent.atomic.AtomicInteger
-
-  /** Shared scaffold for the bounded driver-gated streaming queries
-    * (sessions, curation): stage one parquet file into a drop folder,
-    * run `build(dropDir)`'s stream into a uniquely-named memory sink,
-    * drain it, summarize the sink as a batch frame, and tear everything
-    * down — sink table, staging and checkpoint dirs — even when the run
-    * fails. The memory sink holds one row PER INPUT in driver memory and
-    * this executes once per Verify/Bench invocation, so the (small)
-    * summary is materialized eagerly before the sink is dropped.
-    */
-  def boundedStreamRun(spark: SparkSession, srcParquet: String,
-                       build: String => DataFrame,
-                       summarize: DataFrame => DataFrame,
-                       mode: OutputMode = OutputMode.Append): DataFrame = {
-    val name = s"graft_bounded_${boundedRuns.incrementAndGet()}"
-    try boundedDropRun(spark, srcParquet) { (drop, ckpt) =>
-      val q = build(drop)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      summarize(spark.table(name)).localCheckpoint(true)
-    } finally {
-      import scala.util.control.NonFatal
-      try spark.catalog.dropTempView(name)
-      catch { case NonFatal(_) => () }
-    }
-  }
-
-  /** RocksDB state-store posture (r11 verdict #3): at 100 TB the keyed
-    * session/journey state is the first thing that outgrows executor
-    * heap, and Spark's answer is the spillable RocksDB provider. The
-    * operators must be PROVIDER-AGNOSTIC — same oracle hashes under the
-    * default in-memory store and RocksDB — which this wrapper lets the
-    * registered `*_rocksdb` gates assert: the provider conf is read at
-    * QUERY START, so setting it around a gate that starts its own
-    * queries switches every state store the gate creates. There is no
-    * silent fallback: an unloadable provider class fails the query
-    * loudly, so a hash-green gate proves RocksDB actually held the
-    * state. Restores the prior conf even on failure — the sweep's other
-    * gates keep measuring the default-provider cost.
-    */
-  val RocksDbProvider: String =
-    "org.apache.spark.sql.execution.streaming.state." +
-      "RocksDBStateStoreProvider"
-
-  // Shared lock for every wrapper that scopes a mutation of the
-  // SESSION-level runtime conf around a block (r12 advice): the conf is
-  // shared JVM state, so without the lock an unrelated streaming query
-  // started concurrently inside the window would silently pick up the
-  // scoped provider, and two overlapping scoped gates could restore each
-  // other's value. Verify/Bench run gates sequentially, so the lock is
-  // uncontended there; it exists so a future concurrent harness fails
-  // SAFE (serializes) instead of cross-contaminating.
-  private val confScopeLock = new Object
-
-  def withStateStoreProvider[T](spark: SparkSession, provider: String)
-      (f: => T): T = confScopeLock.synchronized {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, provider)
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  /** Scale-adaptive shuffle/state partition count for a stream gate
-    * (r14, guide §2.2/§2.4): a stateful micro-batch commits one state
-    * store per shuffle partition — a delta file + commit marker each —
-    * and every foreachBatch delta write emits one parquet part per
-    * non-empty partition, so the per-TRIGGER fixed cost is proportional
-    * to the partition count while the per-trigger data is
-    * corpus-bytes / nSlices. Inheriting the session-wide batch setting
-    * (= core count in the bench) made every gate pay 32 state-store
-    * commits per trigger to aggregate a few thousand rows; measured at
-    * sf0.1/32 CPUs (tools/StreamShufProbe, configs INTERLEAVED per rep
-    * so JVM warm-up cannot masquerade as a config effect, min of 3):
-    * 32 → 8 partitions is stream_volume_restart 12.1 → 6.4 s,
+  /** Scale-adaptive shuffle/state partition count for a stream gate: a
+    * stateful micro-batch commits one state store per shuffle partition
+    * (a delta file + commit marker each), and every foreachBatch delta
+    * write emits one parquet part per non-empty partition, so the fixed
+    * cost of a TRIGGER grows with the partition count while its data is
+    * corpus-bytes / nSlices. Inheriting the batch setting (= core count
+    * in the bench) made every gate pay 32 state-store commits per
+    * trigger to aggregate a few thousand rows. Measured at sf0.1 on 32
+    * CPUs (configs interleaved per rep, min of 3; the probe is in git
+    * history): 32 → 8 partitions took stream_volume_restart 12.1 → 6.4 s,
     * stream_late_update 10.8 → 6.3 s, stream_liveness_availablenow
     * 10.5 → 6.6 s, stream_sessions_restart_rocksdb 7.4 → 3.7 s (each
-    * RocksDB store instance owns a native DB), stream_sessions_bounded
-    * 2.7 → 1.7 s; 4 buys little more and regresses the gates whose
-    * per-batch COMPUTE wants task parallelism (stream_profile_restart
-    * 5.25 → 5.72 s), so the floor is 8.
+    * RocksDB store instance owns a native DB); 4 bought little more and
+    * slowed the gates whose per-batch COMPUTE wants task parallelism
+    * (stream_profile_restart 5.25 → 5.72 s), so the floor is 8.
     *
-    * The count is derived from the SOURCE BYTES the gate replays —
-    * ~32 MiB of input per partition, floored at 8 and capped by the
-    * session's parallelism — so it grows with the corpus instead of
-    * being a local-mode constant: sf0.1 (2 MB events) → 8, sf10
-    * (~200 MB) → 8, and at cluster scale the cap (defaultParallelism)
-    * governs long before the floor matters. `SPARK_GRAFT_STREAM_PARTS`
-    * overrides for deployments that size state partitions explicitly
-    * (the production knob; state partition count is fixed at first
-    * checkpoint, so production picks it for peak throughput, not for
-    * one bounded replay).
-    *
-    * Results are partition-count-invariant by construction: every
-    * stateful op here is keyed (flatMapGroupsWithState / windowed agg),
-    * sums are exact decimals or longs, HLL register merges are
-    * commutative, and every gate's summary tail re-sorts. The DuckDB
-    * oracle comparison (tools/check.py) re-proves this per round.
+    * The count is derived from the SOURCE BYTES the gate replays (~32 MiB
+    * of input per partition, floored at 8 and capped by the session's
+    * parallelism), so it grows with the corpus instead of being a
+    * local-mode constant. Results are partition-count-invariant by
+    * construction: every stateful op here is keyed, sums are exact
+    * decimals or longs, HLL register merges commute, and every gate's
+    * summary re-sorts.
     */
   private[graft] def streamGateParts(spark: SparkSession,
-                                     srcBytes: Long): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .orElse(sys.props.get("graft.stream.parts")) // probe/test override
-      // validate: a malformed or non-positive override must fall back to
-      // the derived count, not throw NumberFormatException deep inside a
-      // gate run (or set an invalid partition count) — r14 advice
-      .flatMap(v => scala.util.Try(v.toInt).toOption.filter(_ > 0)
-        .orElse {
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"ignoring invalid stream-parts override '$v' " +
-              "(needs a positive int); using the derived count")
-          None
-        })
-      .getOrElse {
-        val target = 32L << 20
-        val par = spark.sparkContext.defaultParallelism.toLong
-        val floor = par.min(8L).max(1L) // never exceed the core count
-        ((srcBytes + target - 1) / target)
-          .max(floor).min(par.max(floor)).toInt
-      }
+                                     srcBytes: Long): Int = {
+    val target = 32L << 20
+    val par = spark.sparkContext.defaultParallelism.toLong
+    val floor = par.min(8L).max(1L) // never exceed the core count
+    ((srcBytes + target - 1) / target).max(floor).min(par.max(floor)).toInt
+  }
 
-  /** The gate-run checkpoint-checksum setting from its override
-    * (SPARK_GRAFT_CKPT_CHECKSUM): `true` or `false`, any case. Anything
-    * else is warned about and falls back to the default `false`, like
-    * the stream-parts override in [[streamGateParts]], instead of
-    * failing the conf set deep inside a gate run.
+  /** The `.parquet` files of a Spark-written directory in name order, or
+    * the path itself when it is a file.
     */
-  private[graft] def ckptChecksum(raw: Option[String]): String =
-    raw.flatMap { v =>
-      val b = v.trim.toLowerCase(java.util.Locale.ROOT)
-      if (b == "true" || b == "false") Some(b)
-      else {
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"ignoring invalid checkpoint-checksum override '$v' " +
-            "(needs true or false); using false")
-        None
-      }
-    }.getOrElse("false")
-
-  /** Scope the gate-run streaming confs around a gate body. Same
-    * conf-scoping discipline (shared lock, restore-on-exit) as
-    * [[withStateStoreProvider]]; the lock is reentrant, so gates
-    * wrapped in a provider scope compose.
-    *
-    *  - `spark.sql.shuffle.partitions` → [[streamGateParts]] (streams
-    *    read it at query START for a fresh checkpoint; both runs of a
-    *    restart gate share one scope, so the checkpoint-pinned state
-    *    partitioning is consistent).
-    *  - `spark.sql.streaming.checkpoint.fileChecksum.enabled` → false
-    *    (r15, guide §6 file-op volume): Spark 4.1 writes a companion
-    *    checksum file for EVERY checkpoint file (offset log, commit
-    *    log, state deltas — with 8 state partitions that is ~20 extra
-    *    file creates per trigger), to detect corruption in long-lived
-    *    checkpoints on unreliable storage. Every gate checkpoint here
-    *    is a per-run temp dir deleted right after the drain, so the
-    *    checksums protect nothing and only double the per-trigger file
-    *    ops (tools/CkSumAb, min of 3 interleaved: stream_late_update
-    *    7.6→5.7 s, most gates −4-8%). A deployment pointing gates at
-    *    durable checkpoints re-enables via SPARK_GRAFT_CKPT_CHECKSUM=
-    *    true; restart gates are unaffected semantically either way —
-    *    the conf is read per run and files without checksums are
-    *    accepted on resume.
-    */
-  private[graft] def withStreamParts[T](spark: SparkSession,
-                                        srcBytes: Long)(f: => T): T =
-    confScopeLock.synchronized {
-      val keyVals = Seq(
-        "spark.sql.shuffle.partitions" ->
-          streamGateParts(spark, srcBytes).toString,
-        "spark.sql.streaming.checkpoint.fileChecksum.enabled" ->
-          ckptChecksum(sys.env.get("SPARK_GRAFT_CKPT_CHECKSUM")))
-      val prev = keyVals.map { case (k, _) => k -> spark.conf.getOption(k) }
-      keyVals.foreach { case (k, v) => spark.conf.set(k, v) }
-      try f
-      finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+  private[graft] def parquetParts(path: String): Seq[Path] = {
+    val p = Paths.get(path)
+    if (!Files.isDirectory(p)) Seq(p)
+    else {
+      val ls = Files.list(p)
+      try ls.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+        .sortBy(_.getFileName.toString)
+      finally ls.close()
     }
+  }
 
   /** Memoized TIME-SLICED rewrite of a source table, shared across the
-    * stream gates (r8 verdict #2): `updateModeRun` and `restartRun`
+    * stream gates: the restarted, AvailableNow and update-mode gates
     * each need the source re-written as `nSlices` disjoint, name-ordered
-    * event-time ranges (repartitionByRange on (ts, event_id) — the
-    * layout a real drop-folder ingestion produces), and ~10 stream
-    * gates per sweep were each paying their own identical rewrite of
-    * the same events table. Keyed by the source's CONTENT (max part
-    * mtime + total bytes + part count — a directory's own mtime does
-    * not change on an in-place part rewrite, see EventQueries) plus
-    * nSlices; same get-then-putIfAbsent shape as the BPE/evRange
-    * caches — a lost race costs one redundant deterministic rewrite.
-    * Staged dirs are deleted by a JVM shutdown hook (run/test are
-    * forked JVMs, so teardown lands at sweep end, not per query).
+    * event-time ranges (repartitionByRange on (ts, event_id), the layout
+    * a real drop-folder ingestion produces), and ~10 stream gates per
+    * sweep would otherwise each pay their own identical rewrite. Keyed
+    * by the source's CONTENT (max part mtime + total bytes + part count
+    * — a directory's own mtime does not change on an in-place part
+    * rewrite) plus nSlices; a lost race costs one redundant
+    * deterministic rewrite. Staged dirs are deleted by a JVM shutdown
+    * hook (run/test are forked JVMs, so teardown lands at sweep end).
     */
-  // ACCESS-ORDERED (true LRU): the r10 ConcurrentHashMap evicted in
-  // arbitrary iteration order, so under churn the hottest corpus could
-  // be evicted repeatedly and re-pay its full staged rewrite each time
-  // (r10 advice). All access synchronized on the map — staging is a
+  // ACCESS-ORDERED (true LRU), so under churn the hottest corpus is the
+  // last evicted. All access synchronized on the map — staging is a
   // multi-second Spark job, the lock guards microseconds of map ops.
   private val stagedCache = new java.util.LinkedHashMap[
-    (String, Long, Long, Int, Int), java.nio.file.Path](
+    (String, Long, Long, Int, Int), Path](
     16, 0.75f, /*accessOrder=*/ true)
 
-  // DEFERRED eviction deletion (r10 advice): a victim's directory is
-  // queued here at eviction time and deleted only when the NEXT staging
-  // completes — a lazy DataFrame handed out just before the eviction
-  // gets a full staging's worth of wall-clock to be consumed before its
-  // files vanish, shrinking the (already theoretical: Verify/Bench run
-  // queries sequentially) in-use-deletion window.
+  // DEFERRED eviction deletion: a victim's directory is queued here at
+  // eviction time and deleted only when the NEXT staging completes — a
+  // lazy DataFrame handed out just before the eviction gets a full
+  // staging's worth of wall-clock to be consumed before its files
+  // vanish.
   private val pendingEvict =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+    new java.util.concurrent.ConcurrentLinkedQueue[Path]
 
-  private def rmTreeQuiet(p: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
+  private[streaming] def rmTreeQuiet(p: Path): Unit = {
     import scala.util.control.NonFatal
     try {
       val walk = Files.walk(p)
@@ -899,41 +773,25 @@ object StreamingOps {
   private[graft] def stagedTimeSliced(spark: SparkSession,
                                       srcParquet: String,
                                       nSlices: Int): String = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val src = Paths.get(srcParquet)
-    val parts =
-      if (!Files.isDirectory(src)) Seq(src)
-      else {
-        val walk = Files.list(src)
-        try walk.iterator().asScala.toSeq
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-        finally walk.close()
-      }
+    val parts = parquetParts(srcParquet)
     val key = (srcParquet,
       parts.map(Files.getLastModifiedTime(_).toMillis).maxOption
         .getOrElse(0L),
       parts.map(Files.size).sum, parts.size, nSlices)
-    // EXISTENCE check on cache hit (r12 verdict #5): the staged dir can
-    // be deleted out from under a cached entry — the r12 bench SIGTERM
-    // ran the shutdown hook while solo probes were still executing, and
-    // the LRU evict + deferred reap is the same hazard under churn. A
-    // hit whose directory no longer holds a parquet leaf is dropped and
-    // re-staged, so any single registered query is re-runnable
-    // standalone no matter what reaped its staging.
-    def alive(p: java.nio.file.Path): Boolean =
-      Files.isDirectory(p) && {
-        val walk = Files.list(p)
-        try walk.iterator().asScala
-          .exists(_.getFileName.toString.endsWith(".parquet"))
-        finally walk.close()
-      }
-    // the alive() Files.list walk runs OUTSIDE the map lock (r13
-    // advice) — it touches disk; the lock guards microseconds of map
-    // ops only. A dead hit is dropped under a re-check (only if the
-    // key still maps to the SAME path — a concurrent re-stager may
-    // have replaced it) and whatever remains of the partially-reaped
-    // directory is queued for reclamation like any eviction victim.
+    // EXISTENCE check on cache hit: the staged dir can be deleted out
+    // from under a cached entry (a SIGTERM runs the shutdown hook while
+    // queries still execute; the LRU evict + deferred reap is the same
+    // hazard under churn). A hit whose directory no longer holds a
+    // parquet leaf is dropped and re-staged, so any single registered
+    // query is re-runnable standalone no matter what reaped its staging.
+    def alive(p: Path): Boolean =
+      Files.isDirectory(p) && parquetParts(p.toString).nonEmpty
+    // the alive() listing runs OUTSIDE the map lock — it touches disk;
+    // the lock guards microseconds of map ops only. A dead hit is
+    // dropped under a re-check (only if the key still maps to the SAME
+    // path — a concurrent re-stager may have replaced it) and whatever
+    // remains of the partially-reaped directory is queued for
+    // reclamation like any eviction victim.
     val cached = stagedCache.synchronized(Option(stagedCache.get(key)))
     val liveHit = cached.filter(alive)
     if (cached.isDefined && liveHit.isEmpty) {
@@ -961,12 +819,9 @@ object StreamingOps {
           case None =>
             // Bound the cache like the 64-entry range/artifact caches —
             // but a staged entry owns a FULL time-sliced table copy on
-            // temp disk, so eviction must also reclaim the directory
-            // (r9 ADVICE). Evict ONE entry — the LRU eldest, not an
-            // arbitrary one (r10 advice: arbitrary order could evict
-            // the hottest corpus under churn) — and only QUEUE the
-            // deletion; the files are removed when the next staging
-            // completes.
+            // temp disk, so eviction must also reclaim the directory.
+            // Evict ONE entry, the LRU eldest, and only QUEUE the
+            // deletion; the files go when the next staging completes.
             while (stagedCache.size >= 64) {
               val it = stagedCache.entrySet().iterator()
               if (it.hasNext) {
@@ -980,128 +835,62 @@ object StreamingOps {
     }.toString
   }
 
-  /** The staging/teardown scaffold under [[boundedStreamRun]], usable by
-    * runners whose sink is NOT a memory table (e.g. the chunked-delivery
-    * foreachBatch sink): stage `srcParquet` into a drop folder with
-    * deterministic replay order, call `run(dropDir, ckptDir)`, and tear
-    * both temp dirs down even when the run fails.
+  private def events(sfDir: String): String = s"$sfDir/events.parquet"
+
+  private def sevents(s: SparkSession, drop: String): Dataset[SEvent] =
+    eventStream(s, drop).as(Encoders.product[SEvent])
+
+  /** Per-(user, session) span and size: the batch sessionization shape. */
+  private def sessionRollup(sink: DataFrame): DataFrame =
+    sink.groupBy(col("user_id"), col("session_id"))
+      .agg(min(col("ts")).as("session_start"),
+        max(col("ts")).as("session_end"),
+        count(lit(1)).as("n_events"))
+      .orderBy("user_id", "session_id")
+
+  /** Run 1 drains the first `stopAfter` of `nSlices` time slices and
+    * stops; run 2 resumes the SAME checkpoint over the rest, optionally
+    * as an upgraded application (`after`).
     */
-  def boundedDropRun(spark: SparkSession, srcParquet: String)
-                    (run: (String, String) => DataFrame): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val drop = Files.createTempDirectory("graft-drop")
-    val ckpt = Files.createTempDirectory("graft-ckpt")
-    def rmTree(p: java.nio.file.Path): Unit = {
-      val walk = Files.walk(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toSeq.reverse
-          .foreach(f => Files.deleteIfExists(f))
-      } finally walk.close()
-    }
-    try {
-      // srcParquet may be one file (the driver's testdata layout) or a
-      // Spark-written DIRECTORY of part-files (e.g. the sf1 scale-gate
-      // tables): Files.copy of a directory creates an empty directory —
-      // the stream then silently runs on ZERO rows (caught by review:
-      // BENCH_sf1 recorded 0.2 s 'runs' for four rounds). Stage every
-      // part-file in name order. CRITICAL: FileStreamSource orders
-      // discovered files by MODIFICATION TIME, not name — Files.copy
-      // gives all staged files near-identical mtimes, so multi-file
-      // trigger order was effectively arbitrary (caught by StreamCurve:
-      // the session count varied with the batch count). Stamp strictly
-      // increasing mtimes (1 s apart, keyed to name order) so the
-      // replay order is deterministic and matches the part-file order
-      // the writer produced.
-      val src = Paths.get(srcParquet)
-      val base = java.nio.file.attribute.FileTime.fromMillis(1500000000000L)
-      def stamp(p: java.nio.file.Path, i: Int): Unit =
-        Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime
-          .fromMillis(base.toMillis + i * 1000L))
-      var srcBytes = 0L
-      if (Files.isDirectory(src)) {
-        val walk = Files.list(src)
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator().asScala.toSeq
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .sortBy(_.getFileName.toString)
-            .zipWithIndex.foreach { case (f, i) =>
-              srcBytes += Files.size(f)
-              stamp(Files.copy(f, drop.resolve(f"staged-$i%05d.parquet")), i)
-            }
-        } finally walk.close()
-      } else {
-        srcBytes = Files.size(src)
-        stamp(Files.copy(src, drop.resolve("staged-00000.parquet")), 0)
-      }
-      // every bounded/update/availableNow gate funnels through here:
-      // the whole gate body (stream + its summarize tail, which
-      // localCheckpoints inside the scope) runs at the gate partition
-      // count (r14 — see streamGateParts)
-      withStreamParts(spark, srcBytes) { run(drop.toString, ckpt.toString) }
-    } finally {
-      // each teardown step is individually non-fatal-guarded: a cleanup
-      // failure (e.g. a file still held after a failed query) must not
-      // mask the primary error, and a fatal error (OOM, interrupt) must
-      // not be swallowed
-      import scala.util.control.NonFatal
-      try rmTree(drop) catch { case NonFatal(_) => () }
-      try rmTree(ckpt) catch { case NonFatal(_) => () }
-    }
+  private def restartLegs(nSlices: Int, stopAfter: Int,
+                          after: Option[(SparkSession, String) =>
+                            DataFrame] = None): Seq[Leg] = {
+    require(stopAfter > 0 && stopAfter < nSlices,
+      s"restart boundary must be strictly inside the replay: " +
+        s"stopAfter=$stopAfter nSlices=$nSlices")
+    Seq(Leg.Drain(stopAfter), Leg.Drain(build = after))
   }
 
-  /** Bounded END-TO-END run of the streaming sessionizer for the driver
-    * contract: stage the events table into a drop folder, stream it
-    * through the real file source and the stateful
-    * flatMapGroupsWithState sessionizer into a memory sink, drain with
-    * processAllAvailable, and summarize the result as a batch frame.
-    * Structured Streaming is genuinely exercised; boundedness comes
-    * only from the drop folder being finite. The single staged file
-    * arrives as one micro-batch, so per-key event-time order (the
-    * state machine's contract with its upstream) holds trivially. A
-    * multi-file folder replays one file per trigger in part-file NAME
-    * order (boundedStreamRun stamps increasing mtimes — the file
-    * source sorts by mtime, so without the stamps trigger order was
-    * whatever the copy timestamps happened to tie-break to). Per-key
-    * order across batches then holds when the writer made part files
-    * either per-key disjoint (the sf1 scale layout: one replica per
-    * file, disjoint user_id ranges — any file order is correct) or
-    * time-sliced in name order (StreamCurve's repartitionByRange(ts)
-    * layout), the same property a real ingestion pipeline provides by
-    * dropping files as time passes.
+  /** Bounded END-TO-END run of the streaming sessionizer: the events
+    * table replayed through the real file source and the stateful
+    * flatMapGroupsWithState sessionizer into a memory sink, summarized
+    * as a batch frame. A multi-file source replays one file per trigger
+    * in part-file NAME order (the runner stamps increasing mtimes,
+    * because the file source sorts by mtime). Per-key order across
+    * batches then holds when the writer made part files either per-key
+    * disjoint (the sf1 scale layout: disjoint user_id ranges — any file
+    * order is correct) or time-sliced in name order (StreamCurve's
+    * repartitionByRange(ts) layout), the same property a real ingestion
+    * pipeline provides by dropping files as time passes.
     */
-  def sessionSummariesBounded(spark: SparkSession, sfDir: String,
-                              gapSeconds: Long): DataFrame = {
-    import spark.implicits._
-    boundedStreamRun(spark, s"$sfDir/events.parquet",
-      drop => assignSessions(eventStream(spark, drop).as[SEvent],
-        gapSeconds).toDF(),
-      sink => sink
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(min(col("ts")).as("session_start"),
-          max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"))
-        .orderBy("user_id", "session_id"))
-  }
+  def sessionSummariesBounded(sfDir: String, gapSeconds: Long): StreamGate =
+    StreamGate("sessions_bounded", events(sfDir),
+      (s, drop) => assignSessions(sevents(s, drop), gapSeconds).toDF(),
+      d => sessionRollup(d.rows))
 
   /** Bounded END-TO-END run of the streaming journey-instance assembler
     * (R3 via the stream path), summarized to the same shape as the
-    * batch `EventOps.journeyInstancesBounded` rollup so the already-
-    * green `ev_journeys_bounded` oracle gates this query too. Same
-    * replay-order contract as `sessionSummariesBounded` (scaladoc
-    * there); the per-event assignment stream carries event_type so
-    * `completed` (did an END land in the instance) is derivable in the
-    * summary without a second source scan.
+    * batch `EventOps.journeyInstancesBounded` rollup so the
+    * `ev_journeys_bounded` oracle gates this query too. The per-event
+    * assignment stream carries event_type so `completed` (did an END
+    * land in the instance) is derivable without a second source scan.
     */
-  def journeySummariesBounded(spark: SparkSession, sfDir: String,
-                              startType: String, endType: String)
-      : DataFrame = {
-    import spark.implicits._
-    boundedStreamRun(spark, s"$sfDir/events.parquet",
-      drop => assignBoundedInstances(eventStream(spark, drop).as[SEvent],
-        startType, endType).toDF(),
-      sink => sink
+  def journeySummariesBounded(sfDir: String, startType: String,
+                              endType: String): StreamGate =
+    StreamGate("journeys_bounded", events(sfDir),
+      (s, drop) => assignBoundedInstances(sevents(s, drop), startType,
+        endType).toDF(),
+      d => d.rows
         .groupBy(col("user_id"), col("instance_id"))
         .agg(min(col("ts")).as("instance_start"),
           max(col("ts")).as("instance_end"),
@@ -1109,59 +898,53 @@ object StreamingOps {
           (max(when(col("event_type") === endType, 1).otherwise(0)) === 1)
             .as("completed"))
         .orderBy("user_id", "instance_id"))
-  }
 
   /** Bounded END-TO-END run of the chunked-delivery sink: the metric-
-    * alert stream is delivered through `Sources.foreachBatched` in
-    * chunks of `batchSize` (the reference posts 100 outcomes per
-    * request — demo_helper.py:803-816), chunk sizes are gathered on a
-    * collection accumulator (executor-safe; only SIZES cross to the
-    * driver, never rows), and the per-micro-batch chunk statistics come
-    * back as a batch frame — making the 100-per-post contract driver-
-    * visible and SQL-oracle-checkable. Each micro-batch is coalesced to
-    * one partition before chunking so the split is the deterministic
-    * ceil(n/batchSize) the oracle computes (per-partition chunking is
-    * the scale path, but its chunk count depends on partitioning — the
-    * CONTRACT under test is "no chunk exceeds batchSize and full chunks
-    * dominate", which coalesce(1) pins exactly).
+    * alert stream is delivered through [[idempotentDelivery]] in chunks
+    * of `batchSize` (the reference posts 100 outcomes per request —
+    * demo_helper.py:803-816), chunk sizes are gathered on a collection
+    * accumulator (executor-safe; only SIZES cross to the driver, never
+    * rows), and the per-micro-batch chunk statistics come back as a
+    * batch frame — making the 100-per-post contract driver-visible and
+    * SQL-oracle-checkable. The production path chunks per partition;
+    * the CONTRACT under test is the deterministic ceil(n/batchSize)
+    * split the oracle computes, which needs one partition per
+    * micro-batch, so the alert stream is coalesced (chunk keys still
+    * carry the real partition id).
     */
-  def deliveryChunksBounded(spark: SparkSession, sfDir: String,
-                            eventType: String, threshold: Double,
-                            batchSize: Int): DataFrame = {
-    import spark.implicits._
-    boundedDropRun(spark, s"$sfDir/events.parquet") { (drop, ckpt) =>
-      val acc = spark.sparkContext
-        .collectionAccumulator[(Long, Int, Int, Int)]("graft-chunks")
-      val alerts = metricRuleAlerts(eventStream(spark, drop), eventType,
-        threshold)
-      // the production path chunks per partition (no coalesce — that is
-      // foreachBatchedKeyed's default shape); the CONTRACT under test is
-      // the deterministic ceil(n/batchSize) split the oracle computes,
-      // which needs one partition per micro-batch, so the alert stream
-      // is coalesced — chunk keys still carry the real partition id
-      val q = deliverBatchedIdempotent(
-        alerts.coalesce(1), batchSize, ckpt) { (key, g) =>
-        acc.add((key.batchId, key.partitionId, key.chunkIndex, g.size))
-      }
-      try q.processAllAvailable() finally q.stop()
-      import scala.jdk.CollectionConverters._
-      val sent = acc.value.asScala.toSeq
-      val rows = sent
-        .groupBy(_._1).toSeq.sortBy(_._1).zipWithIndex
-        .map { case ((_, chunks), pos) =>
-          val sizes = chunks.map(_._4)
-          // idempotence invariant: no (batchId, partition, chunk) key
-          // may be delivered twice — 0 on every row, and the oracle
-          // hard-codes 0, so ANY duplicate delivery hash-fails the gate
-          val dupKeys = chunks.groupBy(c => (c._2, c._3))
-            .count(_._2.size > 1).toLong
-          (pos.toLong, sizes.map(_.toLong).sum, sizes.size.toLong,
-            sizes.count(_ == batchSize).toLong, sizes.min.toLong,
-            dupKeys)
-        }
-      rows.toDF("batch_pos", "n_rows", "n_chunks", "n_full_chunks",
-        "min_chunk", "n_dup_keys").orderBy("batch_pos")
-    }
+  def deliveryChunksBounded(sfDir: String, eventType: String,
+                            threshold: Double, batchSize: Int): StreamGate = {
+    val sent = new CollectionAccumulator[(Long, Int, Int, Int)]
+    StreamGate("chunks_bounded", events(sfDir),
+      (s, drop) => {
+        if (!sent.isRegistered) s.sparkContext.register(sent, "graft-chunks")
+        metricRuleAlerts(eventStream(s, drop), eventType, threshold)
+          .coalesce(1)
+      },
+      d => {
+        val s = d.session
+        import s.implicits._
+        sent.value.asScala.toSeq
+          .groupBy(_._1).toSeq.sortBy(_._1).zipWithIndex
+          .map { case ((_, chunks), pos) =>
+            val sizes = chunks.map(_._4)
+            // idempotence invariant: no (batchId, partition, chunk) key
+            // may be delivered twice — 0 on every row, and the oracle
+            // hard-codes 0, so ANY duplicate delivery hash-fails the gate
+            val dupKeys = chunks.groupBy(c => (c._2, c._3))
+              .count(_._2.size > 1).toLong
+            (pos.toLong, sizes.map(_.toLong).sum, sizes.size.toLong,
+              sizes.count(_ == batchSize).toLong, sizes.min.toLong,
+              dupKeys)
+          }
+          .toDF("batch_pos", "n_rows", "n_chunks", "n_full_chunks",
+            "min_chunk", "n_dup_keys").orderBy("batch_pos")
+      },
+      sink = Sink.ForeachBatch(idempotentDelivery(batchSize,
+        java.util.concurrent.ConcurrentHashMap.newKeySet[java.lang.Long]()) {
+        (key, g) =>
+          sent.add((key.batchId, key.partitionId, key.chunkIndex, g.size))
+      }))
   }
 
   /** Bounded END-TO-END run of the streaming R2 lateness check: the
@@ -1169,101 +952,77 @@ object StreamingOps {
     * streaming aggregation in complete mode, the heavy distributed pass
     * — and the summary joins the (control-plane-sized) per-day minima
     * against the broadcast cron slots with exactly the batch scoring
-    * (`EventOps.lateStartsFromActual`), so the already-green
-    * `ev_late_starts` oracle gates this query too. Complete mode, not
-    * append: an aggregation's rows FINALIZE only when the watermark
-    * passes them, which never happens for the trailing day of a bounded
-    * replay — complete mode emits the full running aggregate each
-    * trigger and the memory sink holds the final state after the drain.
+    * (`EventOps.lateStartsFromActual`), so the `ev_late_starts` oracle
+    * gates this query too. Complete mode, not append: an aggregation's
+    * rows FINALIZE only when the watermark passes them, which never
+    * happens for the trailing day of a bounded replay.
     *
-    * Scale note (applies to all three complete-mode gates below):
-    * complete mode re-emits the WHOLE aggregate per trigger, so its
-    * sink cost is O(state) per micro-batch — acceptable exactly when
-    * the state is control-plane-sized, which these three are by
-    * construction: (user, day) minima and (type, day) counts grow with
-    * the key space, not the event volume, and liveness state is one
-    * row per agent. The UNBOUNDED production posture — the identical
-    * aggregations in UPDATE mode with a watermark so closed days EVICT
-    * from the state store — is no longer a claim: it is gated by the
-    * `stream_*_update` queries ([[lateStartSummariesUpdate]] /
-    * [[volumeSummariesUpdate]] / [[livenessSummariesUpdate]]), which
-    * hash-match the same oracles and REQUIRE the measured state-store
-    * shrink ([[updateModeRun]]'s sentinel advance).
+    * Scale note (all three complete-mode gates below): complete mode
+    * re-emits the WHOLE aggregate per trigger, so its sink cost is
+    * O(state) per micro-batch — acceptable exactly when the state is
+    * control-plane-sized, which these three are by construction. The
+    * UNBOUNDED production posture — the identical aggregations in
+    * UPDATE mode with a watermark so closed days EVICT — is gated by
+    * the `stream_*_update` queries ([[lateStartSummariesUpdate]] /
+    * [[volumeSummariesUpdate]] / [[livenessSummariesUpdate]]).
     */
-  def lateStartSummariesBounded(spark: SparkSession, sfDir: String,
-                                cron: String, marginSeconds: Long)
-      : DataFrame =
-    boundedStreamRun(spark, s"$sfDir/events.parquet",
-      drop => eventStream(spark, drop)
+  def lateStartSummariesBounded(sfDir: String, cron: String,
+                                marginSeconds: Long): StreamGate =
+    StreamGate("late_bounded", events(sfDir),
+      (s, drop) => eventStream(s, drop)
         .groupBy(col("user_id"), to_date(col("ts")).as("day"))
         .agg(min(col("ts")).as("actual_start")),
-      sink => graft.events.EventOps.lateStartsFromActual(sink, cron,
-        marginSeconds, spark),
-      OutputMode.Complete)
+      d => graft.events.EventOps.lateStartsFromActual(d.rows, cron,
+        marginSeconds, d.session),
+      mode = OutputMode.Complete)
 
   /** Bounded END-TO-END run of the streaming R8 volume monitor: the
     * stream maintains per-(type, day) tumbling-window counts
-    * ([[windowedVolume]], complete mode — same rationale as
-    * [[lateStartSummariesBounded]]); the z-scoring over the daily-count
-    * frame (#types × #days rows) is the shared batch tail
+    * ([[windowedVolume]], complete mode); the z-scoring over the
+    * daily-count frame is the shared batch tail
     * (`EventOps.volumeAnomaliesFromDaily`), so the `ev_volume_anomalies`
     * oracle gates this query too.
     */
-  def volumeSummariesBounded(spark: SparkSession, sfDir: String)
-      : DataFrame =
-    boundedStreamRun(spark, s"$sfDir/events.parquet",
-      drop => windowedVolume(eventStream(spark, drop)),
-      sink => graft.events.EventOps.volumeAnomaliesFromDaily(
-        sink.select(col("event_type"),
+  def volumeSummariesBounded(sfDir: String): StreamGate =
+    StreamGate("volume_bounded", events(sfDir),
+      (s, drop) => windowedVolume(eventStream(s, drop)),
+      d => graft.events.EventOps.volumeAnomaliesFromDaily(
+        d.rows.select(col("event_type"),
           to_date(col("window_start")).as("day"), col("n"))),
-      OutputMode.Complete)
+      mode = OutputMode.Complete)
 
   /** Bounded END-TO-END run of the streaming R9 liveness monitor: the
     * stream maintains the running (last_seen, n_events) per agent key
-    * ([[liveness]], complete mode); the staleness flag against the
-    * stream's high-water mark is the shared batch tail
-    * (`EventOps.livenessFromAgg`), so the `ev_liveness` oracle gates
-    * this query too.
+    * ([[liveness]], complete mode); the staleness flag is the shared
+    * batch tail (`EventOps.livenessFromAgg`), so the `ev_liveness`
+    * oracle gates this query too.
     */
-  def livenessSummariesBounded(spark: SparkSession, sfDir: String)
-      : DataFrame =
-    boundedStreamRun(spark, s"$sfDir/events.parquet",
-      drop => liveness(eventStream(spark, drop)),
-      sink => graft.events.EventOps.livenessFromAgg(sink),
-      OutputMode.Complete)
+  def livenessSummariesBounded(sfDir: String): StreamGate =
+    StreamGate("liveness_bounded", events(sfDir),
+      (s, drop) => liveness(eventStream(s, drop)),
+      d => graft.events.EventOps.livenessFromAgg(d.rows),
+      mode = OutputMode.Complete)
 
   /** Bounded END-TO-END run of the streaming out-of-sequence detector
     * (R4 via the stream path). The alert stream carries the same
     * session numbering as the batch `withSessionId`, so the output is
     * shaped to (and gated by) the `ev_out_of_sequence` oracle.
     */
-  def oosAlertsBounded(spark: SparkSession, sfDir: String,
-                       gapSeconds: Long,
-                       dagClosure: Set[(String, String)]): DataFrame = {
-    import spark.implicits._
-    boundedStreamRun(spark, s"$sfDir/events.parquet",
-      drop => detectOutOfSequence(eventStream(spark, drop).as[SEvent],
-        gapSeconds, dagClosure).toDF(),
-      sink => sink
+  def oosAlertsBounded(sfDir: String, gapSeconds: Long,
+                       dagClosure: Set[(String, String)]): StreamGate =
+    StreamGate("oos_bounded", events(sfDir),
+      (s, drop) => detectOutOfSequence(sevents(s, drop), gapSeconds,
+        dagClosure).toDF(),
+      d => d.rows
         .select(col("user_id"), col("session_id"), col("event_id"),
           col("ts"), col("prev_type"), col("event_type"),
           lit("OUT_OF_SEQUENCE").as("alert_type"))
         .orderBy("event_id"))
-  }
 
-  /** Streaming lineage mining run end-to-end: the real events file
-    * replayed through [[emitTransitions]], the sink's transition rows
-    * aggregated + classified by the SAME tail as the batch miner
-    * (`EventOps.mineTransitions`) — gated by the same DuckDB oracle as
-    * `ev_dag_mine`. In a continuous deployment the tail would run as a
-    * complete-mode aggregation over the transition stream (state =
-    * ≤|types|² pair counts); the bounded harness materializes the
-    * append stream first so the replay stays deterministic.
-    */
-  /** Instance-alert rules over the STREAMING detectors (r11 verdict
-    * #8): the detector → alert → rule → templated-action loop
-    * (`ev_rule_instance_alerts`) run via the stream path, two legs by
-    * the nature of the two alert families:
+  /** Instance-alert rules over the STREAMING detectors: the detector →
+    * alert → rule → templated-action loop (`ev_rule_instance_alerts`)
+    * run via the stream path, as two gates by the nature of the two
+    * alert families:
     *
     *  - OUT_OF_SEQUENCE (event-level): [[detectOutOfSequence]]'s keyed
     *    state machine emits the alert stream, and
@@ -1273,13 +1032,13 @@ object StreamingOps {
     *    actions, the real continuous-deployment shape.
     *  - FAILED_RUN (run-level): "the session's FINAL event is an
     *    error" is only decidable when the session is complete, so the
-    *    leg streams the sessionizer's assignments and applies the
+    *    gate streams the sessionizer's assignments and applies the
     *    shared batch tail ([[graft.events.EventOps
     *    .failedRunAlertsFromSess]]) post-drain, joining event types
     *    back from the static table (the stream-static pattern; the
     *    assignment stream carries only ids + session numbers).
     *
-    * Both legs' actions union under the SAME generated-from-fixture
+    * Both gates' actions union under the SAME generated-from-fixture
     * oracle as the batch query — rule matching, template rendering,
     * and session numbering must all agree across the batch/stream
     * boundary for the hash to hold.
@@ -1290,552 +1049,161 @@ object StreamingOps {
                             rules: Seq[
                               graft.events.EventOps.InstanceAlertRule])
       : DataFrame = {
-    import spark.implicits._
     val E = graft.events.EventOps
-    val oosActions = boundedStreamRun(spark, s"$sfDir/events.parquet",
-      drop => E.instanceAlertActions(
-        detectOutOfSequence(eventStream(spark, drop).as[SEvent],
-            gapSeconds, dagClosure).toDF()
+    val oosActions = StreamGate("rule_alerts_oos", events(sfDir),
+      (s, drop) => E.instanceAlertActions(
+        detectOutOfSequence(sevents(s, drop), gapSeconds, dagClosure).toDF()
           .select(lit("OUT_OF_SEQUENCE").as("alert_type"),
             col("user_id"), col("session_id"), col("event_id"),
             col("event_type"), col("prev_type")),
         rules, ordered = false),
-      identity)
-    val failedActions = boundedStreamRun(spark, s"$sfDir/events.parquet",
-      drop => assignSessions(eventStream(spark, drop).as[SEvent],
-        gapSeconds).toDF(),
-      sink => {
-        val types = graft.Tables.load(spark, sfDir, "events")
+      _.rows).run(spark)
+    val failedActions = StreamGate("rule_alerts_failed_run", events(sfDir),
+      (s, drop) => assignSessions(sevents(s, drop), gapSeconds).toDF(),
+      d => {
+        val types = graft.Tables.load(d.session, sfDir, "events")
           .select(col("event_id"), col("event_type"))
-        val failed = E.failedRunAlertsFromSess(sink.join(types,
+        val failed = E.failedRunAlertsFromSess(d.rows.join(types,
             "event_id"))
           .select(lit("FAILED_RUN").as("alert_type"), col("user_id"),
             col("session_id"), lit(null).cast("long").as("event_id"),
             lit(null).cast("string").as("event_type"),
             lit(null).cast("string").as("prev_type"))
         E.instanceAlertActions(failed, rules, ordered = false)
-      })
+      }).run(spark)
     oosActions.unionByName(failedActions)
       .orderBy(col("rule_id"), col("user_id"), col("session_id"),
         coalesce(col("event_id"), lit(-1L)))
   }
 
   /** Bounded END-TO-END run of the STREAMING INCREMENTAL PROFILER: each
-    * micro-batch is profiled on its own
-    * (`Profiler.profileMergeable` — base passes only, distributed), and
-    * the per-batch profiles (one control-plane row per column) fold into
-    * the running corpus profile with `Profiler.mergeProfiles` inside
-    * foreachBatch. This is the reference's scheduled re-profiling
-    * (profiling run per table group, demo_helper.py:971-989) turned
-    * continuous — and the 100 TB posture of "never re-profile the
-    * lake": per batch the engine aggregates ONLY the new rows; driver
-    * state is the profile itself, ~50 statistics × n_columns however
-    * large the corpus grows. Gated by the same full-table DuckDB oracle
-    * restricted to the mergeable fields, so a hash match proves the
-    * whole fold — batch profiles, decimal-exact sums, extremum and
-    * derived-stat merges — equals a from-scratch profile of the corpus.
+    * micro-batch is profiled on its own (`Profiler.profileMergeable` —
+    * base passes only, distributed), and the per-batch profiles (one
+    * control-plane row per column) fold into the running corpus profile
+    * with `Profiler.mergeProfiles` inside foreachBatch. This is the
+    * reference's scheduled re-profiling (profiling run per table group,
+    * demo_helper.py:971-989) turned continuous — per batch the engine
+    * aggregates ONLY the new rows; driver state is the profile itself,
+    * ~50 statistics × n_columns however large the corpus grows. Gated
+    * by the same full-table DuckDB oracle restricted to the mergeable
+    * fields, so a hash match proves the whole fold equals a
+    * from-scratch profile of the corpus.
     */
-  def profileSummariesBounded(spark: SparkSession, sfDir: String,
-                              withSketch: Boolean = false): DataFrame =
-    boundedDropRun(spark, s"$sfDir/events.parquet") { (drop, ckpt) =>
-      val P = graft.profile.Profiler
-      import scala.jdk.CollectionConverters._
-      // driver state IS the profile: ~50 statistics × n_columns of plain
-      // rows, rebuilt as a literal frame each fold. Earlier rounds held
-      // the fold as a localCheckpointed DataFrame, which leaked one set
-      // of cached RDD blocks per micro-batch in a continuous run; the
-      // collected-row fold has zero cached state and resets lineage for
-      // free (the merge input is a LocalRelation, not a growing plan).
-      var acc: Option[(Seq[org.apache.spark.sql.Row],
-                       org.apache.spark.sql.types.StructType)] = None
-      val q = eventStream(spark, drop).writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val bp = P.profileMergeable(batch, "events", withSketch)
-          val merged = acc match {
-            case None => bp
-            case Some((rows, schema)) =>
-              P.mergeProfiles(
-                spark.createDataFrame(rows.asJava, schema), bp)
-          }
-          acc = Some((merged.collect().toSeq, merged.schema))
+  def profileSummariesBounded(sfDir: String,
+                              withSketch: Boolean = false): StreamGate = {
+    val P = graft.profile.Profiler
+    // driver state IS the profile: collected rows, rebuilt as a literal
+    // frame each fold — no cached blocks per micro-batch, and the merge
+    // input is a LocalRelation, not a growing plan
+    var acc: Option[(Seq[Row], StructType)] = None
+    StreamGate("profile_bounded", events(sfDir),
+      (s, drop) => eventStream(s, drop),
+      d => {
+        val keep = if (withSketch) P.MergeableFields :+ "distinct_sketch"
+                   else P.MergeableFields
+        val (rows, schema) =
+          acc.getOrElse(sys.error("no micro-batch arrived"))
+        d.session.createDataFrame(rows.asJava, schema)
+          .select(keep.map(col): _*)
+          .orderBy("column_name")
+      },
+      sink = Sink.ForeachBatch { (batch, _) =>
+        val bp = P.profileMergeable(batch, "events", withSketch)
+        val merged = acc.fold(bp) { case (rows, schema) =>
+          P.mergeProfiles(
+            batch.sparkSession.createDataFrame(rows.asJava, schema), bp)
         }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val keep = if (withSketch) P.MergeableFields :+ "distinct_sketch"
-                 else P.MergeableFields
-      val (rows, schema) = acc.getOrElse(sys.error("no micro-batch arrived"))
-      spark.createDataFrame(rows.asJava, schema)
-        .select(keep.map(org.apache.spark.sql.functions.col): _*)
-        .orderBy("column_name")
-    }
-
-  /** Outcome of an update-mode monitor run: the folded result plus the
-    * state-store row counts before and after the watermark passed the
-    * data — the evidence that closed windows EVICT (the 100 TB contract
-    * of a continuous monitor: state is bounded by the open horizon, not
-    * by history).
-    */
-  case class UpdateRunResult(result: DataFrame, peakStateRows: Long,
-                             finalStateRows: Long)
-
-  /** UPDATE-MODE scaffold for the production posture of the streaming
-    * monitors. The r7 gates ran the monitor aggregations in COMPLETE
-    * mode, which re-emits the whole aggregate per trigger — O(full
-    * state) sink cost, acceptable only while state is control-plane-
-    * sized. A continuous deployment runs the identical aggregation in
-    * update mode: each trigger emits ONLY the keys that changed, and a
-    * watermark lets the state store evict windows the event-time
-    * horizon has passed. This scaffold proves BOTH halves:
-    *
-    *  1. the emitted updates, folded latest-wins per group key into a
-    *     final table, hash-match the same DuckDB oracle as the batch
-    *     operator (Verify-gated via the `stream_*_update` queries);
-    *  2. after the staged files drain, a driver-written SENTINEL event
-    *     (`user_id = -1`, `event_type = "__sentinel__"`, event time
-    *     ~120 days past the corpus) advances the watermark in two extra
-    *     micro-batches — the first carries the new max event time, the
-    *     second runs under the advanced watermark — and the state-store
-    *     row count (`StreamingQueryProgress.stateOperators
-    *     .numRowsTotal`) SHRINKS from its peak: closed windows left the
-    *     store (StreamingSpec asserts the counts; the update-query
-    *     wrappers also require the shrink so the driver gate itself
-    *     fails if eviction regresses).
-    *
-    * The latest-wins fold is a STORAGE-BACKED MERGE sink
-    * ([[ParquetMergeSink]], r9 — previously a driver LinkedHashMap
-    * fold): each trigger's changed keys are written distributedly as a
-    * batchId-keyed parquet delta inside foreachBatch (replay
-    * overwrites its own delivery — idempotent), and the final table is
-    * the key-compacted latest-wins read. The driver holds O(1) data
-    * rows end to end. The two staged control scans (max event time for
-    * the sentinel; the raw template row) read the STAGED copy, not the
-    * source table, and exist only for the bounded harness.
-    */
-  def updateModeRun(spark: SparkSession, srcParquet: String,
-                    keys: Seq[String],
-                    build: String => DataFrame,
-                    summarize: DataFrame => DataFrame,
-                    sentinelAdvance: Boolean = true): UpdateRunResult = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    var peak = 0L
-    var fin = 0L
-    // WATERMARKED aggregations assume the drop folder receives files in
-    // (approximate) EVENT-TIME order — the property a real ingestion
-    // pipeline provides. The raw sf1 scale layout violates it: each
-    // part file is a full-time-range REPLICA, so from the second
-    // trigger on, most rows sit behind the already-advanced GLOBAL
-    // watermark and would be dropped (per-key-disjoint files only
-    // excuse per-key state, never a global watermark). Stage a
-    // TIME-SLICED rewrite instead — same trigger count (one slice per
-    // input part file), name order = time order, exactly like
-    // [[restartRun]]'s staging. The rewrite is memoized per
-    // (source content, nSlices) and shared across all stream gates of
-    // a sweep ([[stagedTimeSliced]]).
-    val src = Paths.get(srcParquet)
-    val nSlices =
-      if (!Files.isDirectory(src)) 1
-      else {
-        val walk = Files.list(src)
-        try walk.iterator().asScala
-          .count(_.getFileName.toString.endsWith(".parquet")).max(1)
-        finally walk.close()
-      }
-    val sliced = stagedTimeSliced(spark, srcParquet, nSlices)
-    val folded = updateModeRunStaged(spark, sliced, keys, build,
-      summarize, sentinelAdvance, r => { peak = r._1; fin = r._2 })
-    UpdateRunResult(folded, peak, fin)
-  }
-
-  private def updateModeRunStaged(spark: SparkSession, srcParquet: String,
-                                  keys: Seq[String],
-                                  build: String => DataFrame,
-                                  summarize: DataFrame => DataFrame,
-                                  sentinelAdvance: Boolean,
-                                  record: ((Long, Long)) => Unit)
-      : DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    var peak = 0L
-    var fin = 0L
-    val folded = boundedDropRun(spark, srcParquet) { (drop, ckpt) =>
-      // storage-backed keyed upsert: changed rows land as batchId-keyed
-      // parquet deltas (distributed write — the driver never collects a
-      // data row), merged latest-wins per key at read time
-      val sinkDir = Files.createTempDirectory("graft-mergesink")
-      // monitor streams emit a few hundred changed keys per trigger:
-      // sparse delta writes (no per-trigger exchange) + byte-gated
-      // compaction cadence (r10 verdict #6 — the fixed trigger-count
-      // cadence made sparse streams pay per-trigger folds)
-      val sink = new ParquetMergeSink(spark, sinkDir.toString, keys,
-        compactMinBytes = 1L << 20, sparseDeltas = true)
-      val q = build(drop).writeStream
-        .outputMode(OutputMode.Update)
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          sink.merge(batch, id)
-        }
-        .start()
-      def stateRows(ps: Seq[org.apache.spark.sql.streaming
-            .StreamingQueryProgress]): Seq[Long] =
-        ps.filter(_.stateOperators.nonEmpty)
-          .map(_.stateOperators.map(_.numRowsTotal).sum)
-      try {
-        q.processAllAvailable()
-        peak = stateRows(q.recentProgress.toSeq).maxOption.getOrElse(0L)
-        if (sentinelAdvance) {
-          // sentinel: one future-dated event per extra batch, built from
-          // a staged template row so the file schema matches bit-for-bit
-          val tmpl = Files.list(Paths.get(drop)).iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .toSeq.minBy(_.getFileName.toString)
-          val raw = spark.read.parquet(tmpl.toString)
-          // sentinel base = max(ts) over the WHOLE staged drop dir, not
-          // the first (earliest) time slice: with the slice's max, a
-          // corpus whose event-time span approaches ~117 days (120 d
-          // minus the 55 h watermark) would get a sentinel that fails
-          // to advance the watermark past the later windows and the
-          // eviction require() would misfire on a correct operator.
-          // Materialized once so both sentinel files use the corpus
-          // max, not a re-scan that would see sentinel 0.
-          val mxAll = spark.read.parquet(drop)
-            .agg(max(col("ts")).as("__mx")).localCheckpoint(true)
-          val sentDir = Files.createTempDirectory("graft-sentinel")
-          try {
-            (0 to 1).foreach { i =>
-              val out = sentDir.resolve(s"w$i").toString
-              raw.limit(1).drop("ts")
-                .crossJoin(mxAll)
-                .withColumn("ts",
-                  col("__mx") + expr(s"INTERVAL ${120 + i} DAYS"))
-                .drop("__mx")
-                .withColumn("user_id", lit(-1L))
-                .withColumn("event_type", lit("__sentinel__"))
-                .select(raw.columns.map(col): _*)
-                .coalesce(1).write.mode("overwrite").parquet(out)
-              val part = Files.list(Paths.get(out)).iterator().asScala
-                .filter(_.getFileName.toString.endsWith(".parquet"))
-                .toSeq.head
-              val staged = Files.copy(part,
-                Paths.get(drop, f"zz-sentinel-$i%02d.parquet"))
-              Files.setLastModifiedTime(staged,
-                java.nio.file.attribute.FileTime
-                  .fromMillis(1500010000000L + i * 1000L))
-              q.processAllAvailable()
-            }
-          } finally {
-            val walk = Files.walk(sentDir)
-            try walk.iterator().asScala.toSeq.reverse
-              .foreach(f => Files.deleteIfExists(f))
-            finally walk.close()
-          }
-        }
-        fin = stateRows(q.recentProgress.toSeq).lastOption.getOrElse(0L)
-      } finally q.stop()
-      try summarize(sink.read()).localCheckpoint(true)
-      finally rmTreeQuiet(sinkDir)
-    }
-    record((peak, fin))
-    folded
-  }
-
-  /** Trigger.AvailableNow drain — the production CATCH-UP posture
-    * (r8 verdict missing #3): bounded backfill of a folder, then stop.
-    * Unlike the test-only `processAllAvailable()` drain, AvailableNow
-    * snapshots the available input at start, batches it through the
-    * source's own read limits (maxFilesPerTrigger=1 here → one slice
-    * per trigger, same cadence as the bounded gates), and TERMINATES
-    * the query when caught up — `awaitTermination()` returns instead of
-    * blocking forever. Restart semantics differ from the drain too:
-    * a mid-drain failure leaves the source log's committed prefix, and
-    * a NEW AvailableNow run on the same checkpoint must resume exactly
-    * where the failed one stopped.
-    *
-    * This runner bakes that failure INTO the gate: when `failAtBatch`
-    * is set, run 1 throws inside foreachBatch at that batchId (after
-    * earlier batches committed), the runner ASSERTS the injection
-    * actually fired (a `failAtBatch` beyond the real batch count would
-    * otherwise make the recovery leg pass vacuously — r9 ADVICE), and
-    * run 2 must recover — skip the committed prefix, reprocess the
-    * failed batch exactly once, drain the rest, terminate. Delivery is
-    * the storage-backed [[ParquetMergeSink]] in BOTH modes (r10 — the
-    * append path previously collected every delivered row into a
-    * driver SortedMap, the exact fold the r9 rework removed from
-    * `restartRun`): a replayed batch overwrites its own batchId-keyed
-    * delta, and the driver holds O(1) data rows. Registered as the
-    * `stream_*_availablenow` queries under the SAME DuckDB oracles as
-    * the batch twins.
-    */
-  def availableNowRun(spark: SparkSession, srcParquet: String,
-                      nSlices: Int,
-                      build: String => DataFrame,
-                      summarize: DataFrame => DataFrame,
-                      mode: OutputMode = OutputMode.Append,
-                      updateKeys: Seq[String] = Nil,
-                      failAtBatch: Option[Long] = None,
-                      sinkProbe: ParquetMergeSink => Unit = _ => ())
-      : DataFrame = {
-    import java.nio.file.Files
-    val sliced = stagedTimeSliced(spark, srcParquet, nSlices)
-    boundedDropRun(spark, sliced) { (drop, ckpt) =>
-      val sinkDir = Files.createTempDirectory("graft-mergesink")
-      // keyed AvailableNow gates are monitor-shaped (changed-keys
-      // deltas): sparse writes + byte-gated cadence, same as
-      // updateModeRunStaged; both knobs are no-ops in append mode
-      val sink = new ParquetMergeSink(spark, sinkDir.toString, updateKeys,
-        compactMinBytes = 1L << 20, sparseDeltas = true)
-      val injectedMsg = "injected mid-drain failure at batch "
-      val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-      def runOnce(fail: Option[Long]): Unit = {
-        val q = build(drop).writeStream
-          .outputMode(mode)
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            if (fail.contains(id)) {
-              fired.set(true)
-              throw new RuntimeException(injectedMsg + id)
-            }
-            sink.merge(b, id)
-          }
-          .start()
-        try q.awaitTermination()
-        catch {
-          // ONLY the injected mid-drain death is expected — a broader
-          // catch would mask genuine run-1 failures behind the
-          // recovery leg (r9 ADVICE)
-          case e: org.apache.spark.sql.streaming.StreamingQueryException
-              if fail.nonEmpty && e.getCause != null &&
-                 String.valueOf(e.getCause.getMessage)
-                   .startsWith(injectedMsg) =>
-        } finally if (q.isActive) q.stop()
-      }
-      failAtBatch.foreach { f =>
-        runOnce(Some(f))
-        require(fired.get,
-          s"failAtBatch=$f never fired — fewer than ${f + 1} batches " +
-            "drained, so the recovery leg would test nothing")
-      }
-      runOnce(None)
-      try {
-        val folded =
-          if (updateKeys.nonEmpty) sink.read() else sink.readAll()
-        sinkProbe(sink)
-        summarize(folded).localCheckpoint(true)
-      } finally rmTreeQuiet(sinkDir)
-    }
+        acc = Some((merged.collect().toSeq, merged.schema))
+      })
   }
 
   /** R1 sessionization drained under Trigger.AvailableNow with an
-    * injected mid-drain failure + recovery — gated by the same oracle
-    * as `stream_sessions_bounded`.
+    * injected mid-drain failure + recovery: run 1 commits the batches
+    * before `failAtBatch` and dies inside the sink; run 2 must skip the
+    * committed prefix, reprocess the failed batch exactly once, drain
+    * the rest and terminate. Delivery is the storage-backed
+    * [[ParquetMergeSink]], so a replayed batch overwrites its own
+    * batchId-keyed delta and the driver holds O(1) data rows. Gated by
+    * the same oracle as `stream_sessions_bounded`.
     */
-  def sessionSummariesAvailableNow(spark: SparkSession, sfDir: String,
-                                   gapSeconds: Long, nSlices: Int = 4,
-                                   failAtBatch: Long = 2L): DataFrame = {
-    import spark.implicits._
-    availableNowRun(spark, s"$sfDir/events.parquet", nSlices,
-      drop => assignSessions(eventStream(spark, drop).as[SEvent],
-        gapSeconds).toDF(),
-      sink => sink
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(min(col("ts")).as("session_start"),
-          max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"))
-        .orderBy("user_id", "session_id"),
-      failAtBatch = Some(failAtBatch))
-  }
+  def sessionSummariesAvailableNow(sfDir: String, gapSeconds: Long,
+                                   nSlices: Int = 4,
+                                   failAtBatch: Long = 2L): StreamGate =
+    StreamGate("sessions_availablenow", events(sfDir),
+      (s, drop) => assignSessions(sevents(s, drop), gapSeconds).toDF(),
+      d => sessionRollup(d.rows),
+      staging = Staging.TimeSliced(nSlices),
+      legs = Seq(Leg.FailAt(failAtBatch), Leg.Drain()),
+      sink = Sink.Merge())
 
-  /** R9 liveness monitor (stateful update-mode aggregation) drained
-    * under Trigger.AvailableNow through the storage-backed MERGE sink,
-    * with an injected mid-drain failure + recovery — a replayed batch
-    * must overwrite its own delta, never append twice. Gated by the
-    * `ev_liveness` oracle via the shared batch tail.
+  /** R9 liveness monitor (stateful update-mode aggregation) through the
+    * same injected failure + recovery, delivered to the keyed MERGE
+    * sink — a replayed batch must overwrite its own delta, never append
+    * twice. Gated by the `ev_liveness` oracle via the shared batch tail.
     */
-  def livenessSummariesAvailableNow(spark: SparkSession, sfDir: String,
-                                    nSlices: Int = 4,
-                                    failAtBatch: Long = 2L): DataFrame =
-    availableNowRun(spark, s"$sfDir/events.parquet", nSlices,
-      drop => liveness(eventStream(spark, drop)),
-      folded => graft.events.EventOps.livenessFromAgg(folded),
+  def livenessSummariesAvailableNow(sfDir: String, nSlices: Int = 4,
+                                    failAtBatch: Long = 2L): StreamGate =
+    StreamGate("liveness_availablenow", events(sfDir),
+      (s, drop) => liveness(eventStream(s, drop)),
+      d => graft.events.EventOps.livenessFromAgg(d.rows),
+      staging = Staging.TimeSliced(nSlices),
+      legs = Seq(Leg.FailAt(failAtBatch), Leg.Drain()),
       mode = OutputMode.Update,
-      updateKeys = Seq("user_id"),
-      failAtBatch = Some(failAtBatch))
+      sink = Sink.Merge(Seq("user_id")))
 
-  /** CHECKPOINT-RECOVERY (exactly-once restart) scaffold — the core
-    * production contract of Structured Streaming and the failure mode a
-    * continuous 100 TB deployment hits weekly: a query dies mid-replay
-    * and must resume from its checkpoint without dropping or double-
-    * counting anything.
-    *
-    * Mechanics: the source table is re-written as `nSlices` time-sliced
-    * part files (repartitionByRange on (ts, event_id) — disjoint,
-    * name-ordered event-time ranges, the layout a real drop-folder
-    * ingestion produces); the first `stopAfter` slices are staged and
-    * drained under checkpoint C, then the query is STOPPED — simulating
-    * the restart boundary — the remaining slices are staged, and a NEW
-    * query on the SAME checkpoint drains them. The restarted query must
-    * reload keyed state (flatMapGroupsWithState rows / aggregation
-    * buffers / the watermark) from the state store and skip files the
-    * source log already committed.
-    *
-    * The sink is the storage-backed [[ParquetMergeSink]] (r9 — was a
-    * driver-side fold): batches land as batchId-keyed parquet deltas (a
-    * replayed batch OVERWRITES its previous delivery, never appends
-    * twice — Structured Streaming's documented sink contract),
-    * concatenated in batchId order for append-mode outputs or key-
-    * compacted latest-wins per `foldKeys` for update-mode outputs, with
-    * the driver holding O(1) data rows. StreamingSpec asserts the
-    * resumed run is row-identical to an uninterrupted run; the
-    * registered `stream_*_restart` queries gate the resumed output
-    * against the SAME DuckDB oracles as the batch operators.
+  /** R1 sessionization through a mid-replay restart (CHECKPOINT
+    * RECOVERY, the contract a continuous deployment exercises weekly):
+    * the flatMapGroupsWithState sessionizer stops after `stopAfter` of
+    * `nSlices` time slices and a new query resumes the SAME checkpoint —
+    * the per-key (session id, last event time) state MUST come back
+    * from the state store, or every session spanning the restart
+    * boundary splits/renumbers, and files the source log committed must
+    * be skipped. Batches land in the append-mode [[ParquetMergeSink]]
+    * as batchId-keyed deltas (a replayed batch OVERWRITES its previous
+    * delivery). Gated by the same oracle as `stream_sessions_bounded`.
     */
-  def restartRun(spark: SparkSession, srcParquet: String, nSlices: Int,
-                 stopAfter: Int,
-                 build: String => DataFrame,
-                 summarize: DataFrame => DataFrame,
-                 mode: OutputMode = OutputMode.Append,
-                 foldKeys: Seq[String] = Nil,
-                 mapBatch: (DataFrame, Long) => DataFrame =
-                   (b, _) => b,
-                 buildAfterRestart: Option[String => DataFrame] = None)
-      : DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    require(stopAfter > 0 && stopAfter < nSlices,
-      s"restart boundary must be strictly inside the replay: " +
-        s"stopAfter=$stopAfter nSlices=$nSlices")
-    // the time-sliced rewrite is memoized and shared across the sweep's
-    // stream gates ([[stagedTimeSliced]]); only drop/ckpt are per-run
-    val slices = Paths.get(stagedTimeSliced(spark, srcParquet, nSlices))
-    val drop = Files.createTempDirectory("graft-drop")
-    val ckpt = Files.createTempDirectory("graft-ckpt")
-    def rmTree(p: java.nio.file.Path): Unit = {
-      val walk = Files.walk(p)
-      try walk.iterator().asScala.toSeq.reverse
-        .foreach(f => Files.deleteIfExists(f))
-      finally walk.close()
-    }
-    try {
-      val parts = {
-        val walk = Files.list(slices)
-        try walk.iterator().asScala.toSeq
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .sortBy(_.getFileName.toString)
-        finally walk.close()
-      }
-      val srcBytes = parts.map(Files.size).sum
-      def stage(fs: Seq[java.nio.file.Path], offset: Int): Unit =
-        fs.zipWithIndex.foreach { case (f, i) =>
-          val staged = Files.copy(f,
-            drop.resolve(f"staged-${offset + i}%05d.parquet"))
-          Files.setLastModifiedTime(staged,
-            java.nio.file.attribute.FileTime
-              .fromMillis(1500000000000L + (offset + i) * 1000L))
-        }
-      // storage-backed sink (r9, replacing the driver-side batch fold):
-      // every delivered batch lands as a batchId-keyed parquet delta —
-      // a batch replayed across the restart boundary OVERWRITES its
-      // previous delivery — and the final table is the key-compacted
-      // latest-wins read (update mode) or the batchId-ordered
-      // concatenation (append mode). Driver holds O(1) data rows.
-      val sinkDir = Files.createTempDirectory("graft-mergesink")
-      // foldKeys empty = the sink's append mode (first-class since r10;
-      // the old Seq("__none") placeholder made compaction a latent
-      // unresolved-column failure past batch 8 — r9 ADVICE)
-      val sink = new ParquetMergeSink(spark, sinkDir.toString, foldKeys,
-        compactMinBytes = 1L << 20, sparseDeltas = true)
-      def runOnce(b: String => DataFrame): Unit = {
-        val q = b(drop.toString).writeStream
-          .outputMode(mode)
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            sink.merge(mapBatch(b, id), id)
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      // one partition scope over BOTH runs: the state partition count
-      // is pinned into the checkpoint at run 1's first batch, and run 2
-      // resumes it (r14 — see streamGateParts)
-      withStreamParts(spark, srcBytes) {
-        stage(parts.take(stopAfter), 0)
-        runOnce(build) // run 1: dies (stops) after `stopAfter` batches
-        stage(parts.drop(stopAfter), stopAfter)
-        // run 2: SAME checkpoint — state + source log recovered. An
-        // UPGRADED application may resume here (buildAfterRestart —
-        // user-function changes are a supported restart change; the
-        // evolve gate pairs this with versioned-envelope state)
-        runOnce(buildAfterRestart.getOrElse(build))
-        try summarize(
-            if (foldKeys.isEmpty) sink.readAll() else sink.read())
-          .localCheckpoint(true)
-        finally rmTreeQuiet(sinkDir)
-      }
-    } finally {
-      import scala.util.control.NonFatal
-      try rmTree(drop) catch { case NonFatal(_) => () }
-      try rmTree(ckpt) catch { case NonFatal(_) => () }
-    }
-  }
+  def sessionSummariesRestart(sfDir: String, gapSeconds: Long,
+                              nSlices: Int = 4,
+                              stopAfter: Int = 2): StreamGate =
+    StreamGate("sessions_restart", events(sfDir),
+      (s, drop) => assignSessions(sevents(s, drop), gapSeconds).toDF(),
+      d => sessionRollup(d.rows),
+      staging = Staging.TimeSliced(nSlices),
+      legs = restartLegs(nSlices, stopAfter),
+      sink = Sink.Merge())
 
-  /** R1 sessionization through a mid-replay restart: the
-    * flatMapGroupsWithState sessionizer killed after `stopAfter` of
-    * `nSlices` time-sliced files and resumed from its checkpoint — the
-    * per-key (session id, last event time) state MUST come back from
-    * the state store or every session spanning the restart boundary
-    * splits/renumbers. Gated by the same oracle as
-    * `stream_sessions_bounded`.
+  /** STATE SCHEMA EVOLUTION gate: the sessionizer stopped mid-drain and
+    * resumed by an UPGRADED application — run 1 writes version-1 state
+    * ("sid:last"), run 2's function writes version-2 state (added
+    * error-counter field) and must decode every version-1 row it finds
+    * with the new field DEFAULTED. Output must still hash-match the
+    * batch sessionization oracle, and the gate REQUIRES the
+    * cross-version decode actually ran — with state for every active
+    * user at the boundary, a zero upgrade count means the harness, not
+    * the operator, broke.
     */
-  def sessionSummariesRestart(spark: SparkSession, sfDir: String,
-                              gapSeconds: Long, nSlices: Int = 4,
-                              stopAfter: Int = 2): DataFrame = {
-    import spark.implicits._
-    restartRun(spark, s"$sfDir/events.parquet", nSlices, stopAfter,
-      drop => assignSessions(eventStream(spark, drop).as[SEvent],
-        gapSeconds).toDF(),
-      sink => sink
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(min(col("ts")).as("session_start"),
-          max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"))
-        .orderBy("user_id", "session_id"))
-  }
-
-  /** STATE SCHEMA EVOLUTION gate (r10 verdict #3): the sessionizer
-    * killed mid-drain and resumed by an UPGRADED application — run 1
-    * writes version-1 state ("sid:last"), run 2's function writes
-    * version-2 state (added error-counter field) and must decode every
-    * version-1 row it finds with the new field DEFAULTED. Output must
-    * still hash-match the batch sessionization oracle (sessions
-    * spanning the upgrade boundary neither split nor renumber), and the
-    * gate REQUIRES the cross-version decode actually ran — with state
-    * for every active user at the boundary, a zero upgrade count means
-    * the harness, not the operator, broke.
-    */
-  def sessionSummariesEvolve(spark: SparkSession, sfDir: String,
-                             gapSeconds: Long, nSlices: Int = 4,
-                             stopAfter: Int = 2): DataFrame = {
-    import spark.implicits._
-    val upgrades = spark.sparkContext.longAccumulator("state_upgrades")
-    val out = restartRun(spark, s"$sfDir/events.parquet", nSlices,
-      stopAfter,
-      drop => assignSessionsVersioned(eventStream(spark, drop).as[SEvent],
-        gapSeconds, stateVersion = 1).toDF(),
-      sink => sink
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(min(col("ts")).as("session_start"),
-          max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"))
-        .orderBy("user_id", "session_id"),
-      buildAfterRestart = Some(drop =>
-        assignSessionsVersioned(eventStream(spark, drop).as[SEvent],
-          gapSeconds, stateVersion = 2, Some(upgrades)).toDF()))
-    require(upgrades.value > 0L,
-      "state-evolution gate: no v1→v2 state upgrade ever ran — the " +
-        "restart boundary carried no state and the gate would be vacuous")
-    out
+  def sessionSummariesEvolve(sfDir: String, gapSeconds: Long,
+                             nSlices: Int = 4,
+                             stopAfter: Int = 2): StreamGate = {
+    val upgrades = new LongAccumulator
+    StreamGate("sessions_evolve", events(sfDir),
+      (s, drop) => assignSessionsVersioned(sevents(s, drop), gapSeconds,
+        stateVersion = 1).toDF(),
+      d => {
+        require(upgrades.value > 0L,
+          "state-evolution gate: no v1→v2 state upgrade ever ran — the " +
+            "restart boundary carried no state and the gate would be " +
+            "vacuous")
+        sessionRollup(d.rows)
+      },
+      staging = Staging.TimeSliced(nSlices),
+      legs = restartLegs(nSlices, stopAfter, after = Some { (s, drop) =>
+        if (!upgrades.isRegistered)
+          s.sparkContext.register(upgrades, "state_upgrades")
+        assignSessionsVersioned(sevents(s, drop), gapSeconds,
+          stateVersion = 2, Some(upgrades)).toDF()
+      }),
+      sink = Sink.Merge())
   }
 
   /** R8 volume through a mid-replay restart, in UPDATE mode: the
@@ -1844,142 +1212,154 @@ object StreamingOps {
     * replayed batch idempotently. Gated by the same oracle as
     * `ev_volume_anomalies`.
     */
-  def volumeSummariesRestart(spark: SparkSession, sfDir: String,
-                             nSlices: Int = 4, stopAfter: Int = 2)
-      : DataFrame =
-    restartRun(spark, s"$sfDir/events.parquet", nSlices, stopAfter,
-      drop => windowedVolume(eventStream(spark, drop)),
-      folded => graft.events.EventOps.volumeAnomaliesFromDaily(
-        folded.select(col("event_type"),
+  def volumeSummariesRestart(sfDir: String, nSlices: Int = 4,
+                             stopAfter: Int = 2): StreamGate =
+    StreamGate("volume_restart", events(sfDir),
+      (s, drop) => windowedVolume(eventStream(s, drop)),
+      d => graft.events.EventOps.volumeAnomaliesFromDaily(
+        d.rows.select(col("event_type"),
           to_date(col("window_start")).as("day"), col("n"))),
-      OutputMode.Update,
-      foldKeys = Seq("window_start", "event_type"))
+      staging = Staging.TimeSliced(nSlices),
+      legs = restartLegs(nSlices, stopAfter),
+      mode = OutputMode.Update,
+      sink = Sink.Merge(Seq("window_start", "event_type")))
 
   /** The incremental profiler through a mid-replay restart — the
-    * restart story [[profileSummariesBounded]]'s driver fold lacks:
-    * the running merged profile lives OUTSIDE the checkpoint, so a
-    * restarted query would skip the already-committed files (source
-    * log) while a naive fold restarts empty — silently profiling only
-    * the tail. The restart-safe shape keys the fold BY BATCH ID: each
-    * micro-batch's (tiny, control-plane) per-batch profile is stored
+    * restart story [[profileSummariesBounded]]'s driver fold lacks: the
+    * running merged profile lives OUTSIDE the checkpoint, so a
+    * restarted query would skip the already-committed files while a
+    * naive fold restarts empty. The restart-safe shape keys the fold BY
+    * BATCH ID: each micro-batch's per-batch profile lands in the sink
     * under its batchId — a replayed batch re-profiles and OVERWRITES
-    * idempotently, a production deployment MERGEs per-batch profiles
-    * into a store keyed the same way — and the final profile merges
-    * the per-batch profiles in batchId order. Gated by the SAME
-    * full-table oracle as `stream_profile_bounded`: the hash match
-    * proves no batch was lost or double-counted across the restart.
+    * idempotently — and the final profile merges the per-batch profiles
+    * in batchId order. Gated by the SAME full-table oracle as
+    * `stream_profile_bounded`.
     */
-  def profileSummariesRestart(spark: SparkSession, sfDir: String,
-                              nSlices: Int = 4, stopAfter: Int = 2)
-      : DataFrame = {
+  def profileSummariesRestart(sfDir: String, nSlices: Int = 4,
+                              stopAfter: Int = 2): StreamGate = {
     val P = graft.profile.Profiler
-    restartRun(spark, s"$sfDir/events.parquet", nSlices, stopAfter,
-      build = drop => eventStream(spark, drop),
-      summarize = perBatch => {
+    StreamGate("profile_restart", events(sfDir),
+      (s, drop) => eventStream(s, drop),
+      d => {
+        val perBatch = d.rows
         val ids = perBatch.select(col("__batch")).distinct()
           .collect().map(_.getLong(0)).sorted
-        ids.map(i => perBatch.filter(col("__batch") === i)
-            .drop("__batch"))
+        ids.map(i => perBatch.filter(col("__batch") === i).drop("__batch"))
           .reduce(P.mergeProfiles)
-          .select(P.MergeableFields
-            .map(org.apache.spark.sql.functions.col): _*)
+          .select(P.MergeableFields.map(col): _*)
           .orderBy("column_name")
       },
-      mapBatch = (b, id) => P.profileMergeable(b, "events")
-        .withColumn("__batch", lit(id)))
+      staging = Staging.TimeSliced(nSlices),
+      legs = restartLegs(nSlices, stopAfter),
+      sink = Sink.Merge(mapBatch = (b, id) =>
+        P.profileMergeable(b, "events").withColumn("__batch", lit(id))))
   }
+
+  /** UPDATE-MODE production posture of a streaming monitor. The bounded
+    * gates run the monitor aggregations in COMPLETE mode, which
+    * re-emits the whole aggregate per trigger; a continuous deployment
+    * runs the identical aggregation in update mode — each trigger emits
+    * ONLY the keys that changed, folded latest-wins per `keys` in the
+    * [[ParquetMergeSink]] — and a watermark lets the state store evict
+    * windows the event-time horizon has passed. With `sentinelAdvance`
+    * the gate proves the eviction: after the corpus drains,
+    * [[StreamGate.Leg.SentinelAdvance]] moves the watermark past it, and
+    * the summary REQUIRES the state-store row count to end below its
+    * peak, so the driver gate itself fails if eviction regresses.
+    *
+    * WATERMARKED aggregations assume the drop folder receives files in
+    * (approximate) EVENT-TIME order. A layout whose part files each span
+    * the full time range (the sf1 scale layout) would put most rows
+    * behind the already-advanced GLOBAL watermark from the second
+    * trigger on, so the source is always staged as a time-sliced
+    * rewrite with one slice per source part file.
+    */
+  private def updateGate(name: String, sfDir: String, keys: Seq[String],
+                         build: (SparkSession, String) => DataFrame,
+                         summary: Drained => DataFrame,
+                         sentinelAdvance: Boolean): StreamGate =
+    StreamGate(name, events(sfDir), build,
+      d => {
+        if (sentinelAdvance)
+          require(d.finalStateRows < d.peakStateRows,
+            s"closed windows must evict: peak=${d.peakStateRows} " +
+              s"final=${d.finalStateRows}")
+        summary(d)
+      },
+      staging = Staging.TimeSliced(parquetParts(events(sfDir)).size.max(1)),
+      legs = Leg.Drain() +:
+        (if (sentinelAdvance) Seq(Leg.SentinelAdvance) else Nil),
+      mode = OutputMode.Update,
+      sink = Sink.Merge(keys))
 
   /** Production-mode R2 lateness: the per-(user, day) first-event
     * aggregation as an update-mode windowed aggregate with the 55 h
     * watermark, folded and scored by the SAME tail as the batch
     * operator — gated by the `ev_late_starts` oracle — and required to
-    * EVICT closed days from the state store once the watermark passes
-    * them ([[updateModeRun]]'s sentinel). The 1-day tumbling window is
-    * the streaming form of the batch `to_date(ts)` group key: UTC day
-    * boundaries, `day = to_date(window.start)`.
+    * EVICT closed days. The 1-day tumbling window is the streaming form
+    * of the batch `to_date(ts)` group key: UTC day boundaries,
+    * `day = to_date(window.start)`.
     */
-  def lateStartUpdateRun(spark: SparkSession, sfDir: String, cron: String,
-                         marginSeconds: Long,
-                         watermarkDelay: String = DefaultWatermark)
-      : UpdateRunResult =
-    updateModeRun(spark, s"$sfDir/events.parquet",
-      keys = Seq("user_id", "day"),
-      build = drop => eventStream(spark, drop)
+  def lateStartSummariesUpdate(sfDir: String, cron: String,
+                               marginSeconds: Long,
+                               watermarkDelay: String = DefaultWatermark)
+      : StreamGate =
+    updateGate("late_update", sfDir, Seq("user_id", "day"),
+      (s, drop) => eventStream(s, drop)
         .withWatermark("ts", watermarkDelay)
         .groupBy(col("user_id"), window(col("ts"), "1 day"))
         .agg(min(col("ts")).as("actual_start"))
         .select(col("user_id"), to_date(col("window.start")).as("day"),
           col("actual_start")),
-      summarize = folded => graft.events.EventOps.lateStartsFromActual(
-        folded.filter(col("user_id") >= 0), cron, marginSeconds, spark))
-
-  def lateStartSummariesUpdate(spark: SparkSession, sfDir: String,
-                               cron: String, marginSeconds: Long)
-      : DataFrame = {
-    val r = lateStartUpdateRun(spark, sfDir, cron, marginSeconds)
-    require(r.finalStateRows < r.peakStateRows,
-      s"closed days must evict: peak=${r.peakStateRows} " +
-        s"final=${r.finalStateRows}")
-    r.result
-  }
+      d => graft.events.EventOps.lateStartsFromActual(
+        d.rows.filter(col("user_id") >= 0), cron, marginSeconds, d.session),
+      sentinelAdvance = true)
 
   /** Production-mode R8 volume: [[windowedVolume]] (already watermarked)
     * in update mode, folded latest-wins per (window, type), z-scored by
     * the shared batch tail — gated by the `ev_volume_anomalies` oracle —
     * with closed windows required to evict.
     */
-  def volumeUpdateRun(spark: SparkSession, sfDir: String,
-                      watermarkDelay: String = DefaultWatermark)
-      : UpdateRunResult =
-    updateModeRun(spark, s"$sfDir/events.parquet",
-      keys = Seq("window_start", "event_type"),
-      build = drop => windowedVolume(eventStream(spark, drop),
-        watermarkDelay),
-      summarize = folded => graft.events.EventOps.volumeAnomaliesFromDaily(
-        folded.filter(col("event_type") =!= "__sentinel__")
+  def volumeSummariesUpdate(sfDir: String,
+                            watermarkDelay: String = DefaultWatermark)
+      : StreamGate =
+    updateGate("volume_update", sfDir, Seq("window_start", "event_type"),
+      (s, drop) => windowedVolume(eventStream(s, drop), watermarkDelay),
+      d => graft.events.EventOps.volumeAnomaliesFromDaily(
+        d.rows.filter(col("event_type") =!= "__sentinel__")
           .select(col("event_type"), to_date(col("window_start")).as("day"),
-            col("n"))))
-
-  def volumeSummariesUpdate(spark: SparkSession, sfDir: String)
-      : DataFrame = {
-    val r = volumeUpdateRun(spark, sfDir)
-    require(r.finalStateRows < r.peakStateRows,
-      s"closed windows must evict: peak=${r.peakStateRows} " +
-        s"final=${r.finalStateRows}")
-    r.result
-  }
+            col("n"))),
+      sentinelAdvance = true)
 
   /** Production-mode R9 liveness: the running per-agent (last_seen,
     * n_events) aggregate in update mode — each trigger emits only the
     * agents that were seen, not the whole roster. No watermark and no
     * eviction REQUIREMENT: liveness state is one row per agent by
-    * construction (bounded by the key space, not by time — evicting an
-    * agent would forget its last heartbeat, the opposite of the
-    * monitor's purpose), so the scale contract here is
-    * state == roster size, asserted in StreamingSpec. Gated by the
-    * `ev_liveness` oracle via the shared batch tail.
+    * construction (evicting an agent would forget its last heartbeat),
+    * so the scale contract is state == roster size, asserted in
+    * StreamingSpec. Gated by the `ev_liveness` oracle.
     */
-  def livenessUpdateRun(spark: SparkSession, sfDir: String)
-      : UpdateRunResult =
-    updateModeRun(spark, s"$sfDir/events.parquet",
-      keys = Seq("user_id"),
-      build = drop => liveness(eventStream(spark, drop)),
-      summarize = folded => graft.events.EventOps.livenessFromAgg(folded),
+  def livenessSummariesUpdate(sfDir: String): StreamGate =
+    updateGate("liveness_update", sfDir, Seq("user_id"),
+      (s, drop) => liveness(eventStream(s, drop)),
+      d => graft.events.EventOps.livenessFromAgg(d.rows),
       sentinelAdvance = false)
 
-  def livenessSummariesUpdate(spark: SparkSession, sfDir: String)
-      : DataFrame = livenessUpdateRun(spark, sfDir).result
-
-  def dagMineBounded(spark: SparkSession, sfDir: String,
-                     gapSeconds: Long, minSupport: Long,
+  /** Streaming lineage mining run end-to-end: the real events file
+    * replayed through [[emitTransitions]], the sink's transition rows
+    * aggregated + classified by the SAME tail as the batch miner
+    * (`EventOps.mineTransitions`) — gated by the same DuckDB oracle as
+    * `ev_dag_mine`. In a continuous deployment the tail would run as a
+    * complete-mode aggregation over the transition stream (state =
+    * ≤|types|² pair counts); the bounded harness materializes the
+    * append stream first so the replay stays deterministic.
+    */
+  def dagMineBounded(sfDir: String, gapSeconds: Long, minSupport: Long,
                      direct: Seq[(String, String)],
-                     closure: Seq[(String, String)]): DataFrame = {
-    import spark.implicits._
-    boundedStreamRun(spark, s"$sfDir/events.parquet",
-      drop => emitTransitions(eventStream(spark, drop).as[SEvent],
-        gapSeconds).toDF(),
-      sink => graft.events.EventOps.mineTransitions(sink, minSupport,
-        graft.events.Dag.edgeDf(spark, direct),
-        graft.events.Dag.edgeDf(spark, closure)))
-  }
+                     closure: Seq[(String, String)]): StreamGate =
+    StreamGate("dag_mine_bounded", events(sfDir),
+      (s, drop) => emitTransitions(sevents(s, drop), gapSeconds).toDF(),
+      d => graft.events.EventOps.mineTransitions(d.rows, minSupport,
+        graft.events.Dag.edgeDf(d.session, direct),
+        graft.events.Dag.edgeDf(d.session, closure)))
 }

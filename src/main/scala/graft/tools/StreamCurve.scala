@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * micro-batch count: events are range-partitioned by `ts` into k
   * files (file-name order == event-time order, preserving the
   * sessionizer's per-key arrival contract documented on
-  * `sessionSummariesBounded`), staged through the identical
-  * `boundedStreamRun` drop-folder path, and timed end-to-end. A flat
+  * `sessionSummariesBounded`), run through the same `StreamGate`
+  * runner as the registered gates, and timed end-to-end. A flat
   * per-row cost plus a linear per-batch term (checkpoint + state-store
   * commit per micro-batch) is the expected — and healthy — shape: it
   * means 100 TB cost is set by trigger cadence, not corpus size.
@@ -33,24 +33,23 @@ object StreamCurve {
     // all three stateful streaming ops (r6 verdict #7: the per-batch
     // state-store cost story must cover sessions AND journey instances
     // AND out-of-sequence, not just sessions)
-    val ops: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)] = Seq(
-      "sessions" -> ((s, d) => graft.streaming.StreamingOps
-        .sessionSummariesBounded(s, d, 1800L)),
-      "journeys" -> ((s, d) => graft.streaming.StreamingOps
-        .journeySummariesBounded(s, d, "signup", "purchase")),
-      "oos" -> ((s, d) => graft.streaming.StreamingOps
-        .oosAlertsBounded(s, d, 1800L,
+    val ops: Seq[(String, String => graft.streaming.StreamGate)] = Seq(
+      "sessions" -> (d => graft.streaming.StreamingOps
+        .sessionSummariesBounded(d, 1800L)),
+      "journeys" -> (d => graft.streaming.StreamingOps
+        .journeySummariesBounded(d, "signup", "purchase")),
+      "oos" -> (d => graft.streaming.StreamingOps
+        .oosAlertsBounded(d, 1800L,
           graft.events.Dag.closureLocal(graft.events.Dag.FunnelEdges)
             .toSet)),
-      "dagmine" -> ((s, d) => graft.streaming.StreamingOps
-        .dagMineBounded(s, d, 1800L, 5L, graft.events.Dag.FunnelEdges,
+      "dagmine" -> (d => graft.streaming.StreamingOps
+        .dagMineBounded(d, 1800L, 5L, graft.events.Dag.FunnelEdges,
           graft.events.Dag.closureLocal(graft.events.Dag.FunnelEdges))),
       // the incremental profiler folds one mergeable profile per batch:
       // its per-batch cost is a full (narrow-pass) profile of the batch,
       // so the curve shows profile-cost × k, not state-store growth
-      "profile" -> ((s, d) => graft.streaming.StreamingOps
-        .profileSummariesBounded(s, d)))
+      "profile" -> (d => graft.streaming.StreamingOps
+        .profileSummariesBounded(d)))
 
     val ev = spark.read.parquet(s"$src/events.parquet")
     val nRows = ev.count()
@@ -70,11 +69,11 @@ object StreamCurve {
       val dir = stageFor(k)
       val parts = new java.io.File(s"$dir/events.parquet").listFiles()
         .count(_.getName.endsWith(".parquet"))
-      ops.map { case (opName, run) =>
+      ops.map { case (opName, gate) =>
         // warm-up is absorbed by the first run; each run is a fresh
         // stream + checkpoint, so there is no cross-run state to reuse
         val t0 = System.nanoTime()
-        val n = run(spark, dir).count()
+        val n = gate(dir).run(spark).count()
         val sec = (System.nanoTime() - t0) / 1e9
         println(f"[curve] op=$opName%-8s k=$k%3d files=$parts " +
           f"batches~$parts rows=$nRows out=$n time=$sec%.2fs")
@@ -98,12 +97,11 @@ object StreamCurve {
     // staging instead of re-writing the corpus (r12 self-review)
     val dirMid = stageFor(kMid)
     val statefulOps = ops.filter(o => Set("sessions", "journeys")(o._1))
-    val rocksRuns = statefulOps.map { case (opName, run) =>
+    val rocksRuns = statefulOps.map { case (opName, gate) =>
       val t0 = System.nanoTime()
-      val n = graft.streaming.StreamingOps.withStateStoreProvider(spark,
-        graft.streaming.StreamingOps.RocksDbProvider) {
-        run(spark, dirMid).count()
-      }
+      val n = gate(dirMid).copy(provider =
+          Some(graft.streaming.StreamGate.RocksDbProvider))
+        .run(spark).count()
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"[curve] op=$opName%-8s k=$kMid (rocksdb) time=$sec%.2fs")
       s"""{"op":"$opName","k":$kMid,"provider":"rocksdb","sec":$sec,"out":$n}"""

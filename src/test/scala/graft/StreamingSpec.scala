@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.streaming.{SEvent, StreamingOps}
+import graft.streaming.{SEvent, StreamGate, StreamingOps}
 
 /** MemoryStream-driven gate for the streaming operators — the driver's
   * DuckDB oracle cannot run streaming queries, so these specs ARE the
@@ -17,6 +17,21 @@ class StreamingSpec extends AnyFunSuite {
   private def ts(s: String) = Timestamp.valueOf(s)
   private def tmpCheckpoint() =
     java.nio.file.Files.createTempDirectory("ckpt").toString
+
+  private val RocksDb = Some(StreamGate.RocksDbProvider)
+
+  private def sig(df: org.apache.spark.sql.DataFrame) =
+    df.agg(count(lit(1)), sum(xxhash64(df.columns.toSeq.map(col): _*)
+      .cast(org.apache.spark.sql.types.DecimalType(38, 0))))
+      .collect()(0)
+
+  /** Run `g`, keeping what its summary was handed. */
+  private def runDrained(g: StreamGate)
+      : (org.apache.spark.sql.DataFrame, StreamGate.Drained) = {
+    var drained: StreamGate.Drained = null
+    val out = g.copy(summary = d => { drained = d; g.summary(d) }).run(spark)
+    (out, drained)
+  }
 
   test("stateless metric rule fires per micro-batch") {
     import spark.implicits._
@@ -304,7 +319,7 @@ class StreamingSpec extends AnyFunSuite {
     // staging left near-identical mtimes, so a time-sliced multi-file
     // drop replayed in arbitrary order — per-key state advanced past
     // later-arriving earlier events and the session count varied run to
-    // run. boundedStreamRun now stamps strictly increasing mtimes in
+    // run. The gate runner now stamps strictly increasing mtimes in
     // name order; with a repartitionByRange(ts) layout (users span
     // every file) the streamed summary must equal the batch one.
     val baseMs = ts("2024-01-01 10:00:00").getTime
@@ -321,7 +336,7 @@ class StreamingSpec extends AnyFunSuite {
       .repartitionByRange(4, col("ts")).sortWithinPartitions("ts")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val streamed = StreamingOps
-      .sessionSummariesBounded(spark, dir, gapSeconds = 1200)
+      .sessionSummariesBounded(dir, gapSeconds = 1200).run(spark)
       .collect()
       .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("session_id"),
         r.getAs[Timestamp]("session_start"),
@@ -439,7 +454,7 @@ class StreamingSpec extends AnyFunSuite {
     // summary against the batch reader's (Tables.load adapts to the
     // observed type), so any unit drift between the two paths fails.
     val streamed = StreamingOps
-      .sessionSummariesBounded(spark, SparkTestSession.sf, 1800)
+      .sessionSummariesBounded(SparkTestSession.sf, 1800).run(spark)
       .agg(count(lit(1)).as("n"), sum(col("n_events")).as("ev"),
         max(col("session_id")).as("maxsess"))
       .collect()(0)
@@ -461,8 +476,8 @@ class StreamingSpec extends AnyFunSuite {
   test("bounded streaming journeys and out-of-sequence agree with their " +
       "batch implementations on the real table") {
     val streamedJ = StreamingOps
-      .journeySummariesBounded(spark, SparkTestSession.sf, "signup",
-        "purchase")
+      .journeySummariesBounded(SparkTestSession.sf, "signup", "purchase")
+      .run(spark)
       .agg(count(lit(1)), sum(col("n_events")),
         sum(when(col("completed"), 1).otherwise(0))).collect()(0)
     val batchJ = graft.events.EventOps.journeyInstancesBounded(
@@ -474,7 +489,8 @@ class StreamingSpec extends AnyFunSuite {
     val closure = graft.events.Dag.closureLocal(
       graft.events.Dag.FunnelEdges)
     val streamedO = StreamingOps
-      .oosAlertsBounded(spark, SparkTestSession.sf, 1800, closure.toSet)
+      .oosAlertsBounded(SparkTestSession.sf, 1800, closure.toSet)
+      .run(spark)
       .agg(count(lit(1)), sum(col("event_id")), max(col("session_id")))
       .collect()(0)
     val batchO = graft.events.EventOps.outOfSequence(
@@ -494,7 +510,8 @@ class StreamingSpec extends AnyFunSuite {
     // pair under the production threshold — the spec gates stream/batch
     // AGREEMENT, not the threshold (EventsSpec covers pruning)
     val streamed = StreamingOps
-      .dagMineBounded(spark, SparkTestSession.sf, 1800, 1, direct, closure)
+      .dagMineBounded(SparkTestSession.sf, 1800, 1, direct, closure)
+      .run(spark)
       .collect().toSeq
     val batch = graft.events.EventOps.mineDag(
         graft.Tables.load(spark, SparkTestSession.sf, "events"), 1800, 1,
@@ -511,21 +528,17 @@ class StreamingSpec extends AnyFunSuite {
     // proves is the STREAMING aggregation state (running min / windowed
     // count / running max under the file source) matches the batch scan
     val ev = graft.Tables.load(spark, SparkTestSession.sf, "events")
-    def sig(df: org.apache.spark.sql.DataFrame) =
-      df.agg(count(lit(1)), sum(xxhash64(df.columns.map(col): _*)
-        .cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .collect()(0)
-    val sLate = StreamingOps.lateStartSummariesBounded(spark,
-      SparkTestSession.sf, "0 6 * * *", 600)
+    val sLate = StreamingOps.lateStartSummariesBounded(
+      SparkTestSession.sf, "0 6 * * *", 600).run(spark)
     val bLate = graft.events.EventOps.lateStarts(ev, "0 6 * * *", 600,
       spark)
     assert(sig(sLate) == sig(bLate))
-    val sVol = StreamingOps.volumeSummariesBounded(spark,
-      SparkTestSession.sf)
+    val sVol = StreamingOps.volumeSummariesBounded(SparkTestSession.sf)
+      .run(spark)
     val bVol = graft.events.EventOps.volumeAnomalies(ev)
     assert(sig(sVol) == sig(bVol))
-    val sLive = StreamingOps.livenessSummariesBounded(spark,
-      SparkTestSession.sf)
+    val sLive = StreamingOps.livenessSummariesBounded(SparkTestSession.sf)
+      .run(spark)
     val bLive = graft.events.EventOps.heartbeatLiveness(ev)
     assert(sig(sLive) == sig(bLive))
     assert(sLate.count() > 0 && sVol.count() > 0 && sLive.count() > 0)
@@ -543,8 +556,8 @@ class StreamingSpec extends AnyFunSuite {
     try {
       ev.repartition(4).write.mode("overwrite")
         .parquet(s"$staged/events.parquet")
-      val stream = StreamingOps.profileSummariesBounded(spark,
-        staged.toString)
+      val stream = StreamingOps.profileSummariesBounded(staged.toString)
+        .run(spark)
       val batch = graft.profile.Profiler
         .profileMergeable(ev, "events")
         .orderBy("column_name")
@@ -575,7 +588,8 @@ class StreamingSpec extends AnyFunSuite {
       ev.repartition(4).write.mode("overwrite")
         .parquet(s"$staged/events.parquet")
       val folded = StreamingOps
-        .profileSummariesBounded(spark, staged.toString, withSketch = true)
+        .profileSummariesBounded(staged.toString, withSketch = true)
+        .run(spark)
         .select(col("column_name"),
           hll_sketch_estimate(col("distinct_sketch")).as("est"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -609,54 +623,49 @@ class StreamingSpec extends AnyFunSuite {
   test("update-mode monitors match their batch twins AND evict closed " +
       "state once the watermark passes it") {
     val ev = graft.Tables.load(spark, SparkTestSession.sf, "events")
-    def sig(df: org.apache.spark.sql.DataFrame) =
-      df.agg(count(lit(1)), sum(xxhash64(df.columns.map(col): _*)
-        .cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .collect()(0)
     // R2 lateness: update-mode windowed min + watermark
-    val late = StreamingOps.lateStartUpdateRun(spark, SparkTestSession.sf,
-      "0 6 * * *", 600)
-    assert(sig(late.result) ==
+    val (late, lateSt) = runDrained(StreamingOps.lateStartSummariesUpdate(
+      SparkTestSession.sf, "0 6 * * *", 600))
+    assert(sig(late) ==
       sig(graft.events.EventOps.lateStarts(ev, "0 6 * * *", 600, spark)))
     // the (user, day) state grew to the full history during replay, then
     // the sentinel advanced the watermark past every real day — closed
     // days must have LEFT the state store
-    assert(late.peakStateRows > 0)
-    assert(late.finalStateRows < late.peakStateRows,
-      s"peak=${late.peakStateRows} final=${late.finalStateRows}")
+    assert(lateSt.peakStateRows > 0)
+    assert(lateSt.finalStateRows < lateSt.peakStateRows,
+      s"peak=${lateSt.peakStateRows} final=${lateSt.finalStateRows}")
     // R8 volume: update-mode windowed count + watermark
-    val vol = StreamingOps.volumeUpdateRun(spark, SparkTestSession.sf)
-    assert(sig(vol.result) == sig(graft.events.EventOps.volumeAnomalies(ev)))
-    assert(vol.finalStateRows < vol.peakStateRows,
-      s"peak=${vol.peakStateRows} final=${vol.finalStateRows}")
+    val (vol, volSt) =
+      runDrained(StreamingOps.volumeSummariesUpdate(SparkTestSession.sf))
+    assert(sig(vol) == sig(graft.events.EventOps.volumeAnomalies(ev)))
+    assert(volSt.finalStateRows < volSt.peakStateRows,
+      s"peak=${volSt.peakStateRows} final=${volSt.finalStateRows}")
     // R9 liveness: update mode, NO watermark — state is one row per
     // agent by design (evicting would forget last heartbeats); the
     // scale contract is state == roster size, not eviction
-    val live = StreamingOps.livenessUpdateRun(spark, SparkTestSession.sf)
-    assert(sig(live.result) ==
+    val (live, liveSt) =
+      runDrained(StreamingOps.livenessSummariesUpdate(SparkTestSession.sf))
+    assert(sig(live) ==
       sig(graft.events.EventOps.heartbeatLiveness(ev)))
     val roster = ev.select("user_id").distinct().count()
-    assert(live.finalStateRows == roster,
-      s"state=${live.finalStateRows} roster=$roster")
+    assert(liveSt.finalStateRows == roster,
+      s"state=${liveSt.finalStateRows} roster=$roster")
   }
 
   test("update-mode staging is layout-independent: full-time-range " +
       "replica part files cannot ride the global watermark") {
-    // Regression for the sf1-layout defect UpdateSf1Check caught at
-    // scale: when every part file spans the FULL time range (disjoint
-    // by key, not by time), a straight file-per-trigger replay puts
+    // Regression for the sf1-layout defect a scale check caught (the
+    // check is in git history): when every part file spans the FULL
+    // time range (disjoint by key, not by time), a straight
+    // file-per-trigger replay puts
     // most of files 2..n behind the already-advanced GLOBAL watermark
     // and the update-mode aggregation silently drops them —
     // per-key-disjoint files excuse per-key state, never a global
-    // watermark. updateModeRun must therefore re-slice its input by
+    // watermark. The update gates must therefore re-slice their input by
     // event time regardless of the incoming layout. Spec-scale fence:
     // rewrite the real events table hash-partitioned by user (3 full-
     // range replicas) and require the update-mode monitor to still
     // equal its batch twin.
-    def sig(df: org.apache.spark.sql.DataFrame) =
-      df.agg(count(lit(1)), sum(xxhash64(df.columns.map(col): _*)
-        .cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .collect()(0)
     val ev = graft.Tables.load(spark, SparkTestSession.sf, "events")
     val dir = java.nio.file.Files
       .createTempDirectory("graft-replica-layout")
@@ -672,11 +681,11 @@ class StreamingSpec extends AnyFunSuite {
         finally walk.close()
       }
       assert(nFiles == 3, s"layout must be multi-file, got $nFiles")
-      val late = StreamingOps.lateStartUpdateRun(spark, dir.toString,
-        "0 6 * * *", 600)
-      assert(sig(late.result) ==
+      val (late, st) = runDrained(StreamingOps.lateStartSummariesUpdate(
+        dir.toString, "0 6 * * *", 600))
+      assert(sig(late) ==
         sig(graft.events.EventOps.lateStarts(ev, "0 6 * * *", 600, spark)))
-      assert(late.finalStateRows < late.peakStateRows)
+      assert(st.finalStateRows < st.peakStateRows)
     } finally {
       import scala.jdk.CollectionConverters._
       val walk = java.nio.file.Files.walk(dir)
@@ -688,13 +697,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming multi-journey OOS equals the batch fused pass on the " +
       "real table") {
-    def sig(df: org.apache.spark.sql.DataFrame) =
-      df.agg(count(lit(1)), sum(xxhash64(df.columns.map(col): _*)
-        .cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .collect()(0)
     val ev = graft.Tables.load(spark, SparkTestSession.sf, "events")
-    val streamed = StreamingOps.oosMultiAlertsBounded(spark,
-      SparkTestSession.sf, 1800, graft.events.Dag.MultiJourneys)
+    val streamed = StreamingOps.oosMultiAlertsBounded(
+      SparkTestSession.sf, 1800, graft.events.Dag.MultiJourneys).run(spark)
     val batch = graft.events.EventOps.outOfSequenceMulti(ev, 1800,
       graft.events.Dag.MultiJourneys, spark)
     assert(sig(streamed) == sig(batch))
@@ -703,101 +708,129 @@ class StreamingSpec extends AnyFunSuite {
 
   test("checkpoint recovery: a stream killed mid-replay and restarted " +
       "from its checkpoint converges to the uninterrupted answer") {
-    def sig(df: org.apache.spark.sql.DataFrame) =
-      df.agg(count(lit(1)), sum(xxhash64(df.columns.map(col): _*)
-        .cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .collect()(0)
     // sessions: flatMapGroupsWithState state (session id + last event
     // time per user) must reload from the state store — a session
     // spanning the restart boundary renumbers if it doesn't
-    val resumed = StreamingOps.sessionSummariesRestart(spark,
-      SparkTestSession.sf, 1800, nSlices = 4, stopAfter = 2)
-    val uninterrupted = StreamingOps.sessionSummariesBounded(spark,
-      SparkTestSession.sf, 1800)
+    val resumed = StreamingOps.sessionSummariesRestart(
+      SparkTestSession.sf, 1800, nSlices = 4, stopAfter = 2).run(spark)
+    val uninterrupted = StreamingOps.sessionSummariesBounded(
+      SparkTestSession.sf, 1800).run(spark)
     assert(sig(resumed) == sig(uninterrupted))
     assert(resumed.count() > 0)
     // volume (update mode): windowed aggregation buffers + watermark
     // recover; the latest-wins fold absorbs any replayed batch
-    val vResumed = StreamingOps.volumeSummariesRestart(spark,
-      SparkTestSession.sf, nSlices = 4, stopAfter = 2)
+    val vResumed = StreamingOps.volumeSummariesRestart(
+      SparkTestSession.sf, nSlices = 4, stopAfter = 2).run(spark)
     val ev = graft.Tables.load(spark, SparkTestSession.sf, "events")
     assert(sig(vResumed) == sig(graft.events.EventOps.volumeAnomalies(ev)))
     // incremental profiler: the batchId-keyed fold through the restart
     // equals the uninterrupted fold (no batch lost or double-counted)
-    val pResumed = StreamingOps.profileSummariesRestart(spark,
-      SparkTestSession.sf, nSlices = 4, stopAfter = 2)
-    val pBounded = StreamingOps.profileSummariesBounded(spark,
-      SparkTestSession.sf)
+    val pResumed = StreamingOps.profileSummariesRestart(
+      SparkTestSession.sf, nSlices = 4, stopAfter = 2).run(spark)
+    val pBounded = StreamingOps.profileSummariesBounded(
+      SparkTestSession.sf).run(spark)
     assert(sig(pResumed) == sig(pBounded))
   }
 
   test("RocksDB state store: the stateful gates produce bit-identical " +
       "results under the spillable provider, and the conf is restored") {
-    def sig(df: org.apache.spark.sql.DataFrame) =
-      df.agg(count(lit(1)), sum(xxhash64(df.columns.map(col): _*)
-        .cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .collect()(0)
     val key = "spark.sql.streaming.stateStore.providerClass"
-    val before = spark.conf.getOption(key)
+    val before = spark.conf.getAll
     // sessionization through a restart, state held by RocksDB: must
     // equal the default-provider uninterrupted run bit for bit
-    val rocks = StreamingOps.withStateStoreProvider(spark,
-      StreamingOps.RocksDbProvider) {
-      assert(spark.conf.get(key) == StreamingOps.RocksDbProvider)
-      StreamingOps.sessionSummariesRestart(spark,
-        SparkTestSession.sf, 1800, nSlices = 4, stopAfter = 2)
-    }
-    val uninterrupted = StreamingOps.sessionSummariesBounded(spark,
-      SparkTestSession.sf, 1800)
+    val (rocks, st) = runDrained(StreamingOps.sessionSummariesRestart(
+      SparkTestSession.sf, 1800, nSlices = 4, stopAfter = 2)
+      .copy(provider = RocksDb))
+    assert(st.session.conf.get(key) == StreamGate.RocksDbProvider)
+    val uninterrupted = StreamingOps.sessionSummariesBounded(
+      SparkTestSession.sf, 1800).run(spark)
     assert(sig(rocks) == sig(uninterrupted))
     assert(rocks.count() > 0)
-    assert(spark.conf.getOption(key) == before,
-      "provider conf must be restored for the rest of the sweep")
+    assert(spark.conf.getAll == before,
+      "a gate's provider must not reach the caller's session")
     // journeys (the second stateful family) under RocksDB
-    val jRocks = StreamingOps.withStateStoreProvider(spark,
-      StreamingOps.RocksDbProvider) {
-      StreamingOps.journeySummariesBounded(spark, SparkTestSession.sf,
-        "signup", "purchase")
-    }
-    val jDefault = StreamingOps.journeySummariesBounded(spark,
-      SparkTestSession.sf, "signup", "purchase")
+    val jRocks = StreamingOps.journeySummariesBounded(SparkTestSession.sf,
+      "signup", "purchase").copy(provider = RocksDb).run(spark)
+    val jDefault = StreamingOps.journeySummariesBounded(SparkTestSession.sf,
+      "signup", "purchase").run(spark)
     assert(sig(jRocks) == sig(jDefault))
+  }
+
+  test("a gate whose state-store provider class does not exist fails " +
+      "loudly instead of falling back") {
+    val e = intercept[Exception](StreamingOps.sessionSummariesBounded(
+      SparkTestSession.sf, 1800)
+      .copy(provider = Some("graft.NoSuchStateStoreProvider")).run(spark))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage)
+        .contains("NoSuchStateStoreProvider")), e)
+  }
+
+  test("two gates with different providers run at once from one " +
+      "session: each gives its sequential result on its own session, " +
+      "and the caller's conf is unchanged") {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    def gates = Seq(
+      StreamingOps.sessionSummariesRestart(SparkTestSession.sf, 1800),
+      StreamingOps.sessionSummariesRestart(SparkTestSession.sf, 1800)
+        .copy(provider = RocksDb))
+    val sequential = gates.map(g => sig(g.run(spark)))
+    val before = spark.conf.getAll
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val runs = Await.result(Future.sequence(gates.map(g => Future {
+      val t0 = System.nanoTime()
+      val (out, st) = runDrained(g)
+      (sig(out), st.session.conf.getOption(key), t0, System.nanoTime())
+    })), 10.minutes)
+    assert(runs.map(_._1) == sequential)
+    assert(runs.map(_._3).max < runs.map(_._4).min, "the gates overlapped")
+    assert(!runs(0)._2.contains(StreamGate.RocksDbProvider))
+    assert(runs(1)._2.contains(StreamGate.RocksDbProvider))
+    assert(spark.conf.getAll == before)
+  }
+
+  test("a gate that does not drain within the pass timeout throws, " +
+      "naming the gate, and leaves none of its queries running") {
+    val caller = spark.newSession()
+    caller.conf.set("spark.graft.passTimeoutSec", "2")
+    var gateSession: org.apache.spark.sql.SparkSession = null
+    val sleepy = StreamGate("sleepy_sink",
+      s"${SparkTestSession.sf}/events.parquet",
+      (s, drop) => { gateSession = s; StreamingOps.eventStream(s, drop) },
+      _.rows, sink = StreamGate.Sink.ForeachBatch((_, _) =>
+        Thread.sleep(120000)))
+    val t0 = System.nanoTime()
+    val e = intercept[java.util.concurrent.TimeoutException](
+      sleepy.run(caller))
+    val took = (System.nanoTime() - t0) / 1e9
+    assert(e.getMessage.contains("sleepy_sink"))
+    assert(took < 60, s"the gate took $took s to give up")
+    assert(gateSession.streams.active.isEmpty)
   }
 
   test("Trigger.AvailableNow: the catch-up drain terminates on its own, " +
       "and a mid-drain death resumes from the checkpoint to the " +
       "uninterrupted answer") {
-    def sig(df: org.apache.spark.sql.DataFrame) =
-      df.agg(count(lit(1)), sum(xxhash64(df.columns.map(col): _*)
-        .cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .collect()(0)
     // sessions, append path: run 1 commits batches 0-1, dies at 2; the
     // recovery AvailableNow run must skip the committed prefix, replay
-    // batch 2 exactly once, drain 3, and TERMINATE (awaitTermination
-    // returning IS the trigger's contract — a hung drain times the
-    // suite out rather than passing)
-    val failed = StreamingOps.sessionSummariesAvailableNow(spark,
-      SparkTestSession.sf, 1800, nSlices = 4, failAtBatch = 2L)
-    // r10: the append path delivers through the storage-backed sink —
-    // the probe proves every delivered row lives on disk as a
-    // batchId-keyed delta (one per drained slice), i.e. the driver
-    // materializes no delivered rows (the r9 SortedMap fold is gone)
+    // batch 2 exactly once, drain 3, and TERMINATE
+    val failed = StreamingOps.sessionSummariesAvailableNow(
+      SparkTestSession.sf, 1800, nSlices = 4, failAtBatch = 2L).run(spark)
+    // the append path delivers through the storage-backed sink — the
+    // probe proves every delivered row lives on disk as a batchId-keyed
+    // delta (one per drained slice), i.e. the driver materializes no
+    // delivered rows
     var sinkParts = -1
     var sinkRows = -1L
-    val clean = StreamingOps.availableNowRun(spark,
-      s"${SparkTestSession.sf}/events.parquet", 4,
-      drop => {
-        import spark.implicits._
-        StreamingOps.assignSessions(
-          StreamingOps.eventStream(spark, drop).as[graft.streaming.SEvent],
-          1800).toDF()
-      },
-      sink => sink.groupBy(col("user_id"), col("session_id"))
-        .agg(min(col("ts")).as("session_start"),
-          max(col("ts")).as("session_end"),
-          count(lit(1)).as("n_events"))
-        .orderBy("user_id", "session_id"),
-      sinkProbe = s => { sinkParts = s.partCount; sinkRows = s.readAll().count() })
+    val g = StreamingOps.sessionSummariesAvailableNow(SparkTestSession.sf,
+      1800, nSlices = 4).copy(legs = Seq(StreamGate.Leg.Drain()))
+    val clean = g.copy(summary = d => {
+      sinkParts = d.sinkParts
+      sinkRows = d.rows.count()
+      g.summary(d)
+    }).run(spark)
     assert(sinkParts >= 4,
       s"expected one storage delta per drained slice, saw $sinkParts")
     val evRows = spark.read
@@ -805,15 +838,15 @@ class StreamingSpec extends AnyFunSuite {
     assert(sinkRows == evRows,
       s"storage sink must hold every delivered row: $sinkRows vs $evRows")
     assert(sig(failed) == sig(clean))
-    val bounded = StreamingOps.sessionSummariesBounded(spark,
-      SparkTestSession.sf, 1800)
+    val bounded = StreamingOps.sessionSummariesBounded(
+      SparkTestSession.sf, 1800).run(spark)
     assert(sig(failed) == sig(bounded))
     assert(failed.count() > 0)
     // liveness, update path through the storage-backed MERGE sink: the
     // replayed batch overwrites its own delta, so the recovered drain
     // equals the batch twin
-    val lFailed = StreamingOps.livenessSummariesAvailableNow(spark,
-      SparkTestSession.sf, nSlices = 4, failAtBatch = 2L)
+    val lFailed = StreamingOps.livenessSummariesAvailableNow(
+      SparkTestSession.sf, nSlices = 4, failAtBatch = 2L).run(spark)
     val lBatch = graft.queries.EventQueries.queries("ev_liveness")(
       spark, SparkTestSession.sf)
     assert(sig(lFailed) == sig(lBatch))
@@ -1029,17 +1062,6 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("schema contract"))
     assert(e.getMessage.contains("ts"))
-  }
-
-  test("checkpoint-checksum override accepts only true/false; anything " +
-      "else falls back to the default instead of failing a gate") {
-    assert(StreamingOps.ckptChecksum(None) == "false")
-    assert(StreamingOps.ckptChecksum(Some("true")) == "true")
-    assert(StreamingOps.ckptChecksum(Some(" TRUE ")) == "true")
-    assert(StreamingOps.ckptChecksum(Some("false")) == "false")
-    Seq("", "yes", "1", "on", "treu").foreach { v =>
-      assert(StreamingOps.ckptChecksum(Some(v)) == "false", v)
-    }
   }
 
   test("time-sliced staging is memoized per (source content, nSlices): " +
